@@ -22,41 +22,12 @@ from pyspark.sql import functions as F
 
 from ..functions.text import words
 from ..operators.dp_batch import DPParams
+from ..streaming._drain import run_available_now
 from ..streaming.stateful import bound_contributions_stream, dp_histogram_stream
 
-__all__ = ["WORDCOUNT_PARAMS", "wordcount_topology"]
+__all__ = ["WORDCOUNT_PARAMS", "run_wordcount_two_stage"]
 
 WORDCOUNT_PARAMS = dict(epsilon=8.0, delta=1e-6, c=100, t=12, mu=15)
-
-
-def wordcount_topology(
-    documents: DataFrame,
-    params: DPParams | None = None,
-    text_col: str = "text",
-    user_col: str = "user_id",
-    max_contributions: int = 100,
-    num_buckets: int = 4,
-) -> DataFrame:
-    """Assemble the streaming word-count DP pipeline on a (streaming)
-    documents DataFrame; returns the streaming histogram DataFrame
-    (write with ``foreachBatch(histogram_file_sink(...))``)."""
-    if params is None:
-        params = DPParams.from_budget(
-            WORDCOUNT_PARAMS["epsilon"],
-            WORDCOUNT_PARAMS["delta"],
-            c=WORDCOUNT_PARAMS["c"],
-            t=WORDCOUNT_PARAMS["t"],
-            mu=WORDCOUNT_PARAMS["mu"],
-        )
-    # P1: split -> one row per word with count 1
-    word_rows = documents.select(
-        F.col(user_col).cast("string").alias("user_id"),
-        F.explode(words(F.col(text_col))).alias("key"),
-    ).withColumn("value", F.lit(1.0))
-    # A2: per-user bound (state sharded by user hash)
-    bounded = bound_contributions_stream(word_rows, max_contributions, user_col="user_id")
-    # A1-A13: DP mechanism keyed by word
-    return dp_histogram_stream(bounded, params, num_buckets=num_buckets)
 
 
 def run_wordcount_two_stage(
@@ -69,7 +40,6 @@ def run_wordcount_two_stage(
     max_contributions: int = 100,
     num_buckets: int = 4,
     sink=None,
-    await_secs: int = 300,
 ):
     """Run the topology as TWO chained streaming queries staged through
     parquet: Spark does not allow two ``applyInPandasWithState``
@@ -100,15 +70,12 @@ def run_wordcount_two_stage(
     # one stage-1 batch to exactly one DP epoch (without this, each
     # state partition writes its own file and epochs fragment)
     bounded = bounded.coalesce(1)
-    q1 = (
+    run_available_now(
         bounded.writeStream.outputMode("append")
         .format("parquet")
-        .option("path", stage_dir)
-        .option("checkpointLocation", f"{checkpoint_dir}/stage1")
-        .trigger(availableNow=True)
-        .start()
+        .option("path", stage_dir),
+        f"{checkpoint_dir}/stage1",
     )
-    q1.awaitTermination(await_secs)
 
     staged = (
         spark.readStream.schema("user_id string, key string, value double")
@@ -118,13 +85,10 @@ def run_wordcount_two_stage(
     collected: list = []
     if sink is None:
         sink = lambda df, bid: collected.append((bid, df.collect()))
-    q2 = (
+    run_available_now(
         dp_histogram_stream(staged, params, num_buckets=num_buckets)
         .writeStream.outputMode("update")
-        .foreachBatch(sink)
-        .option("checkpointLocation", f"{checkpoint_dir}/stage2")
-        .trigger(availableNow=True)
-        .start()
+        .foreachBatch(sink),
+        f"{checkpoint_dir}/stage2",
     )
-    q2.awaitTermination(await_secs)
     return collected

@@ -28,7 +28,6 @@ from .stateful import (
     bloom_dedup_stream,
     bound_contributions_stream,
     dedup_stream,
-    bound_contributions_stream_keyed,
     dp_histogram_stream,
     replay_filter_stream,
 )
@@ -48,7 +47,6 @@ __all__ = [
     "curation_filter_stream",
     "quality_predicate",
     "dedup_stream",
-    "bound_contributions_stream_keyed",
     "dp_histogram_stream",
     "dp_histogram_stream_keyed",
     "prev_epoch_counts_stream",

@@ -84,7 +84,6 @@ def ann_ingest_stream(
     id_col: str = "vec_id",
     compressed: bool = False,
     idempotent: bool = True,
-    trigger_available_now: bool = True,
 ):
     """Append every micro-batch of ``embeddings`` (a streaming
     DataFrame) to the standing index at ``index_path`` (built
@@ -119,9 +118,9 @@ def ann_ingest_stream(
                 [(qid, int(epoch_id))], "query_id string, epoch_id long"
             ).coalesce(1).write.mode("append").parquet(ledger)
 
-    writer = embeddings.writeStream.foreachBatch(_process).option(
-        "checkpointLocation", checkpoint_dir
+    return (
+        embeddings.writeStream.foreachBatch(_process)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -195,7 +195,6 @@ def neardup_ingest_stream(
     index_path: str,
     survivors_path: str,
     checkpoint_dir: str,
-    trigger_available_now: bool = True,
     **dials,
 ):
     """Wire :func:`process_ingest_batch` onto a streaming document
@@ -205,12 +204,12 @@ def neardup_ingest_stream(
     def _process(batch: DataFrame, epoch_id: int) -> None:
         process_ingest_batch(batch, index_path, survivors_path, **dials)
 
-    writer = docs.writeStream.foreachBatch(_process).option(
-        "checkpointLocation", checkpoint_dir
+    return (
+        docs.writeStream.foreachBatch(_process)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def process_curated_batch(
@@ -276,7 +275,6 @@ def curated_ingest_stream(
     checkpoint_dir: str,
     rejects_path: str | None = None,
     min_score: float = 0.0,
-    trigger_available_now: bool = True,
     **dials,
 ):
     """Quality-gate + near-dedup curation as one streaming pipeline.
@@ -293,9 +291,9 @@ def curated_ingest_stream(
             **dials,
         )
 
-    writer = docs.writeStream.foreachBatch(_process).option(
-        "checkpointLocation", checkpoint_dir
+    return (
+        docs.writeStream.foreachBatch(_process)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

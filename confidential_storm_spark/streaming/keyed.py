@@ -42,8 +42,13 @@ releases (Algorithm 3) land on exactly the leaf the per-bucket
 mechanism would use.  The one semantic difference from the per-bucket
 operator: a predicted release for a key that NEVER reappears is
 emitted on the key's next invocation (late) rather than at the
-predicted epoch; the cumulative sums are identical.  The per-bucket
-operator remains available for exact tick-parity (T4 heartbeats).
+predicted epoch; the cumulative sums are identical.
+
+Both DP operators stay.  Word count keeps the per-bucket operator
+because it is faster there: one drain of 2,000 sealed documents takes
+15-16 s on it against 32-41 s through this pipeline (3 interleaved
+drains each on a 4-core host).  This pipeline stays because its state
+does not grow with the number of users.
 
 ``transformWithStateInPandas`` (Spark 4's per-key state API) would
 collapse stage 3's packing boilerplate, but it cannot run in this
@@ -74,11 +79,13 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..dp.mechanism import StreamingDPMechanism
 from ..dp.tree import BinaryAggregationTree
 from ..operators.dp_batch import DPParams
+from ._drain import run_available_now
 
 __all__ = [
     "stamp_epoch_stream",
@@ -97,23 +104,18 @@ PREV_COUNTS_SCHEMA = "key string, epoch int, total double, prev_epoch int"
 # ---------------------------------------------------------------------------
 
 
-def stamp_epoch_stream(events: DataFrame, path: str, checkpoint: str):
+def stamp_epoch_stream(events: DataFrame, path: str, checkpoint: str) -> StreamingQuery:
     """Stamp each micro-batch with ``epoch = batch_id`` and write ONE
     parquet file per batch (``coalesce(1)`` keeps batch == epoch for
-    the downstream ``maxFilesPerTrigger=1`` file source).  Returns the
-    (started) StreamingQuery."""
+    the downstream ``maxFilesPerTrigger=1`` file source).  Drains all
+    available input and returns the terminated StreamingQuery."""
 
     def write(df: DataFrame, batch_id: int) -> None:
         df.withColumn("epoch", F.lit(batch_id).cast("int")).coalesce(1).write.mode(
             "append"
         ).parquet(path)
 
-    return (
-        events.writeStream.foreachBatch(write)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return run_available_now(events.writeStream.foreachBatch(write), checkpoint)
 
 
 def read_epoch_stream(spark: SparkSession, path: str, schema: str) -> DataFrame:
@@ -181,7 +183,8 @@ def stamp_event_time_epoch_stream(
     production stream does this for free.
 
     Writes one parquet file per emitted micro-batch
-    (``EVENT_STAMPED_SCHEMA``); returns the started query."""
+    (``EVENT_STAMPED_SCHEMA``); drains all available input and returns
+    the terminated query."""
     import datetime as dt
 
     win_us = _window_micros(window)
@@ -210,12 +213,8 @@ def stamp_event_time_epoch_stream(
         # single-task the upstream stateful aggregation
         df.repartition(1).write.mode("append").parquet(path)
 
-    return (
-        stamped.writeStream.foreachBatch(write)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return run_available_now(
+        stamped.writeStream.foreachBatch(write).outputMode("append"), checkpoint
     )
 
 
@@ -443,7 +442,9 @@ def run_keyed_dp_available_now(
     (one ``availableNow`` pass per stage, in order — in production the
     three checkpointed queries run concurrently).  All checkpoints and
     handoffs live under ``workdir``, so calling this again after new
-    input files arrive RESUMES from state (recovery-tested).
+    input files arrive RESUMES from state (recovery-tested).  A stage
+    that fails, or is still running after its wait, raises before the
+    next stage reads its handoff.
 
     ``epoch_mode='processing'`` stamps ``epoch = batch_id`` (reference
     T3 parity: wall-clock ticks); ``epoch_mode='event_time'`` derives
@@ -460,7 +461,7 @@ def run_keyed_dp_available_now(
     progress: dict[str, list] = {}
 
     if epoch_mode == "event_time":
-        q1 = stamp_event_time_epoch_stream(
+        stamp_event_time_epoch_stream(
             events,
             stamped_path,
             f"{workdir}/ckpt_stamp",
@@ -472,7 +473,6 @@ def run_keyed_dp_available_now(
             delay,
             origin,
         )
-        q1.awaitTermination(300)
         stamped = (
             spark.readStream.schema(EVENT_STAMPED_SCHEMA)
             .option("maxFilesPerTrigger", 1)
@@ -480,8 +480,7 @@ def run_keyed_dp_available_now(
         )
         prev = prev_epoch_counts_stream(stamped)
     elif epoch_mode == "processing":
-        q1 = stamp_epoch_stream(events, stamped_path, f"{workdir}/ckpt_stamp")
-        q1.awaitTermination(300)
+        stamp_epoch_stream(events, stamped_path, f"{workdir}/ckpt_stamp")
         stamped = read_epoch_stream(spark, stamped_path, schema)
         prev = prev_epoch_counts_stream(stamped, key_col, user_col, value_col)
     else:
@@ -495,14 +494,10 @@ def run_keyed_dp_available_now(
         # per batch keeps the downstream batch == epoch mapping)
         df.repartition(1).write.mode("append").parquet(prev_path)
 
-    q2 = (
-        prev.writeStream.foreachBatch(write_prev)
-        .outputMode("update")
-        .option("checkpointLocation", f"{workdir}/ckpt_prev")
-        .trigger(availableNow=True)
-        .start()
+    q2 = run_available_now(
+        prev.writeStream.foreachBatch(write_prev).outputMode("update"),
+        f"{workdir}/ckpt_prev",
     )
-    q2.awaitTermination(300)
     progress["prev_counts"] = [
         pr["stateOperators"][0] for pr in q2.recentProgress if pr["stateOperators"]
     ]
@@ -513,15 +508,12 @@ def run_keyed_dp_available_now(
         .parquet(prev_path)
     )
     out: list = []
-    q3 = (
+    q3 = run_available_now(
         dp_histogram_stream_keyed(prev_stream, params)
         .writeStream.outputMode("update")
-        .foreachBatch(lambda df, bid: out.append((bid, df.collect())))
-        .option("checkpointLocation", f"{workdir}/ckpt_dp")
-        .trigger(availableNow=True)
-        .start()
+        .foreachBatch(lambda df, bid: out.append((bid, df.collect()))),
+        f"{workdir}/ckpt_dp",
     )
-    q3.awaitTermination(300)
     progress["dp"] = [
         pr["stateOperators"][0] for pr in q3.recentProgress if pr["stateOperators"]
     ]

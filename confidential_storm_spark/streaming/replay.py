@@ -35,6 +35,8 @@ import uuid
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
+from ._drain import run_available_now
+
 __all__ = ["write_epoch_source", "replay_available_now"]
 
 
@@ -79,7 +81,6 @@ def replay_available_now(
     output_mode: str = "append",
     output_schema: str | None = None,
     latest_per: list[str] | None = None,
-    timeout_s: int = 300,
     shuffle_partitions: int | None = None,
 ) -> DataFrame:
     """Run ``transform(stream_df)`` over a deterministic epoch replay
@@ -171,16 +172,10 @@ def replay_available_now(
         def sink(bdf: DataFrame, bid: int) -> None:
             batches.append((bid, bdf.toPandas()))
 
-        q = (
-            out.writeStream.outputMode(output_mode)
-            .foreachBatch(sink)
-            .option("checkpointLocation", os.path.join(work, "ckpt", uuid.uuid4().hex))
-            .trigger(availableNow=True)
-            .start()
+        run_available_now(
+            out.writeStream.outputMode(output_mode).foreachBatch(sink),
+            os.path.join(work, "ckpt", uuid.uuid4().hex),
         )
-        q.awaitTermination(timeout_s)
-        if q.exception() is not None:
-            raise q.exception()
 
         frames = [p for _, p in sorted(batches, key=lambda t: t[0]) if len(p)]
         if not frames:

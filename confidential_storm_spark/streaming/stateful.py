@@ -1,7 +1,7 @@
 """Stateful streaming operators via ``applyInPandasWithState``.
 
-Three operators mirror the reference's per-enclave mutable state
-(SURVEY §1.3):
+The operators mirror the reference's per-enclave mutable state
+(SURVEY §1.3) or keep per-key state for ingest:
 
 - :func:`dp_histogram_stream` — the DP-SQLP mechanism; state = the
   per-bucket forest of trees + round state (pickled blob per bucket,
@@ -9,10 +9,16 @@ Three operators mirror the reference's per-enclave mutable state
   StreamingDPMechanism.java:34-96).  One micro-batch == one epoch
   (the reference's ZK epoch barrier is Spark's micro-batch barrier,
   SURVEY §2.9 T2).
+- :func:`heartbeat_stream` — T4 dummy traffic as a source, unioned
+  into :func:`dp_histogram_stream` for exact tick parity.
 - :func:`bound_contributions_stream` — per-user running contribution
   counts (UserContributionLimiter.java:12).
 - :func:`replay_filter_stream` — per-producer (max_seen, 128-bit mask)
   anti-replay window (ReplayWindow.java:9-33).
+- :func:`dedup_stream` — exact content dedup on the state store.
+- :func:`bloom_dedup_stream` — maybe-dup flagging in fixed-size Bloom
+  state.
+- :func:`reservoir_kmin_stream` — a per-key deterministic k-min sample.
 
 Scale notes: state is partitioned by the group key (bucket / user
 bucket / producer), so state-store shards spread across executors;
@@ -37,10 +43,12 @@ from ..operators.dp_batch import DPParams
 
 __all__ = [
     "dp_histogram_stream",
+    "heartbeat_stream",
     "bound_contributions_stream",
-    "bound_contributions_stream_keyed",
     "replay_filter_stream",
     "dedup_stream",
+    "bloom_dedup_stream",
+    "reservoir_kmin_stream",
 ]
 
 
@@ -195,50 +203,6 @@ def bound_contributions_stream(
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-
-
-def bound_contributions_stream_keyed(
-    events: DataFrame,
-    max_contributions: int,
-    user_col: str = "user_id",
-    order_cols: tuple[str, ...] = (),
-) -> DataFrame:
-    """PER-USER state variant of :func:`bound_contributions_stream`
-    (round 3, same motivation as the per-key DP state): state is ONE
-    ``long`` per user on the state store instead of a pickled
-    user->count dict per hash bucket, so state writes scale with users
-    touched per batch and a row is never larger than O(1).  NULL users
-    always pass (event-level privacy) — they bypass the stateful
-    operator entirely via a union, since a null group key would
-    otherwise collapse all null rows into one group."""
-    cols = events.columns
-
-    def process(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        admitted = int(state.get[0]) if state.exists else 0
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        if not chunks:
-            return
-        pdf = pd.concat(chunks, ignore_index=True)
-        if order_cols:
-            pdf = pdf.sort_values(list(order_cols), ignore_index=True)
-        room = max(0, max_contributions - admitted)
-        out = pdf.iloc[:room][cols]
-        state.update((admitted + len(out),))
-        if len(out):
-            yield out
-
-    schema = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in events.schema.fields)
-    with_user = events.filter(F.col(user_col).isNotNull())
-    bounded = with_user.groupBy(user_col).applyInPandasWithState(
-        process,
-        outputStructType=schema,
-        stateStructType="admitted long",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-    return bounded.unionByName(events.filter(F.col(user_col).isNull()))
 
 
 def replay_filter_stream(

@@ -93,7 +93,7 @@ def test_streaming_dp_mu_gate(stream_reader):
 
 def test_streaming_bounding_across_batches(stream_reader):
     batches = [
-        [("u1", "a", 1.0, i) for i in range(3)],
+        [("u1", "a", 1.0, i) for i in range(3)] + [(None, "a", 1.0, 50)],
         [("u1", "a", 1.0, 10 + i) for i in range(3)] + [("u2", "a", 1.0, 99)],
     ]
     stream = stream_reader(batches, SCHEMA)
@@ -107,6 +107,20 @@ def test_streaming_bounding_across_batches(stream_reader):
     u1 = sorted(r["seq"] for r in rows if r["user_id"] == "u1")
     assert u1 == [0, 1, 2, 10]  # first 4 across batches, in seq order
     assert [r["seq"] for r in rows if r["user_id"] == "u2"] == [99]
+    assert [r["seq"] for r in rows if r["user_id"] is None] == [50]  # NULLs pass
+
+
+def test_available_now_timeout_stops_query(spark, stream_reader, tmp_path):
+    """A stage that outlives its wait is stopped and raises, instead of
+    being taken as finished while it still writes its handoff."""
+    from confidential_storm_spark.streaming._drain import run_available_now
+
+    before = {q.id for q in spark.streams.active}
+    stream = stream_reader([[("u1", "a", 1.0, i)] for i in range(3)], SCHEMA)
+    writer = stream.writeStream.foreachBatch(lambda df, bid: df.collect())
+    with pytest.raises(TimeoutError):
+        run_available_now(writer, str(tmp_path / "ckpt"), timeout_s=0.001)
+    assert {q.id for q in spark.streams.active} == before
 
 
 def test_streaming_replay_window(stream_reader):
@@ -263,30 +277,6 @@ def test_streaming_dp_heartbeat_ticks_silent_buckets(spark, tmp_path):
             by_epoch.setdefault(r["epoch"], {})[r["key"]] = r["count"]
     # heartbeat-only ticks advanced epochs 1 and 2 with carried state
     assert by_epoch == {0: {"k": 2}, 1: {"k": 2}, 2: {"k": 2}}
-
-
-def test_streaming_bounding_keyed_matches_bucketed(stream_reader):
-    """Round-3 per-user state variant: same admit semantics as the
-    bucketed operator (first C per user across batches, NULLs pass),
-    with one long of state per user instead of a dict blob."""
-    from confidential_storm_spark.streaming import bound_contributions_stream_keyed
-
-    batches = [
-        [("u1", "a", 1.0, i) for i in range(3)] + [(None, "a", 1.0, 50)],
-        [("u1", "a", 1.0, 10 + i) for i in range(3)] + [("u2", "a", 1.0, 99)],
-    ]
-    stream = stream_reader(batches, SCHEMA)
-    out: list = []
-    _run_stream(
-        bound_contributions_stream_keyed(stream, max_contributions=4, order_cols=("seq",)),
-        out,
-        mode="append",
-    )
-    rows = [r for _, batch in out for r in batch]
-    u1 = sorted(r["seq"] for r in rows if r["user_id"] == "u1")
-    assert u1 == [0, 1, 2, 10]
-    assert [r["seq"] for r in rows if r["user_id"] == "u2"] == [99]
-    assert sorted(r["seq"] for r in rows if r["user_id"] is None) == [50]
 
 
 DOC_SCHEMA = "doc_id long, text string"

@@ -6,7 +6,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from confidential_storm_spark.operators.dp_batch import DPParams
-from confidential_storm_spark.plans.wordcount import wordcount_topology
 from confidential_storm_spark.sources.jokes import read_sealed_documents
 from confidential_storm_spark.streaming.sinks import (
     histogram_file_sink,
