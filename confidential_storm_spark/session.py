@@ -6,8 +6,12 @@ defaults are chosen for the 100 TB design point:
 
 - AQE on (runtime re-plan, skew-join splitting, partition coalescing)
 - Arrow on (every pandas-UDF boundary is Arrow-batched)
-- shuffle partitions sized to cores locally; a cluster deployment
+- 32 shuffle partitions (``$SPARK_GRAFT_SHUFFLE_PARTITIONS``) for
+  batch queries, which AQE coalesces at runtime; a cluster deployment
   should size them to ~128 MB of shuffle data per partition.
+  Streaming stages get no AQE, so ``streaming._drain.run_available_now``
+  starts each new checkpoint with at most one shuffle partition per
+  task slot instead.
 """
 
 from __future__ import annotations

@@ -7,22 +7,55 @@ when the caller moves on leaves a half-written handoff behind, so the
 wait's outcome is part of the contract: a finished stage returns, a
 failed stage raises its failure, and a stage that outlives the wait is
 stopped and raises ``TimeoutError``.
+
+A stage starts with ``spark.sql.shuffle.partitions`` capped at
+``sparkContext.defaultParallelism`` (the task slots).  AQE is off in
+streaming queries, so every shuffle partition is a task in every
+micro-batch, and in the ``applyInPandasWithState`` stages here each
+one is a Python worker task with its own state store.  Each such task
+pays about 0.2 s of fixed Python set-up whether or not it holds rows,
+so on a 4-core host the session's batch default of 32 ran eight waves
+of mostly empty tasks per stateful stage per batch; at one wave the
+per-key DP drain's median epoch fell from 8.9 s to 3.1 s (medians of
+10 drains each on that host).  The session value is restored after
+``start()``, so batch queries keep their setting (and AQE coalescing).
+Spark records the count in the checkpoint's offset log and reuses it
+on every restart, so the cap applies only to new checkpoints; an
+existing checkpoint resumes with its own count.  A cluster with at
+least as many slots as the session setting is unchanged.  The cap is
+a set-and-restore of the session conf, so stages that share a session
+are started from one thread.
 """
 
 from __future__ import annotations
 
 from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
+_SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
+
 
 def run_available_now(
     writer: DataStreamWriter, checkpoint: str, timeout_s: float = 300
 ) -> StreamingQuery:
     """Start ``writer`` with ``trigger(availableNow=True)`` checkpointed
-    at ``checkpoint`` and wait until it has drained its input.  Returns
-    the terminated query (its ``recentProgress`` stays readable); raises
-    the query's failure, or stops it and raises ``TimeoutError`` once
-    ``timeout_s`` seconds pass."""
-    q = writer.option("checkpointLocation", checkpoint).trigger(availableNow=True).start()
+    at ``checkpoint`` and wait until it has drained its input.  A new
+    checkpoint gets at most one shuffle partition per task slot (see
+    the module docstring).  Returns the terminated query (its
+    ``recentProgress`` stays readable); raises the query's failure, or
+    stops it and raises ``TimeoutError`` once ``timeout_s`` seconds
+    pass."""
+    spark = writer._df.sparkSession
+    parts = spark.conf.get(_SHUFFLE_PARTITIONS)
+    slots = spark.sparkContext.defaultParallelism
+    spark.conf.set(_SHUFFLE_PARTITIONS, str(min(int(parts), slots)))
+    try:
+        q = (
+            writer.option("checkpointLocation", checkpoint)
+            .trigger(availableNow=True)
+            .start()
+        )
+    finally:
+        spark.conf.set(_SHUFFLE_PARTITIONS, parts)
     if not q.awaitTermination(timeout_s):
         q.stop()
         raise TimeoutError(

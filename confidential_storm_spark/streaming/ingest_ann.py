@@ -48,7 +48,10 @@ import os
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.utils import AnalysisException
+
+from ._drain import run_available_now
 
 __all__ = ["ann_ingest_stream"]
 
@@ -84,7 +87,7 @@ def ann_ingest_stream(
     id_col: str = "vec_id",
     compressed: bool = False,
     idempotent: bool = True,
-):
+) -> StreamingQuery:
     """Append every micro-batch of ``embeddings`` (a streaming
     DataFrame) to the standing index at ``index_path`` (built
     beforehand with ``ivf_write_index`` / ``ivfpq_write_index``).
@@ -94,7 +97,8 @@ def ann_ingest_stream(
     checkpoint's query id) in the ``{index_path}/_epochs`` ledger, so
     checkpoint-replayed batches don't double-append and a FRESH
     checkpoint's epochs never collide with a previous run's ids.
-    Returns the started StreamingQuery."""
+    Drains all available input and returns the terminated
+    StreamingQuery."""
     from ..operators.pq import ivfpq_append
     from ..operators.similarity import ivf_append
 
@@ -118,9 +122,6 @@ def ann_ingest_stream(
                 [(qid, int(epoch_id))], "query_id string, epoch_id long"
             ).coalesce(1).write.mode("append").parquet(ledger)
 
-    return (
-        embeddings.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return run_available_now(
+        embeddings.writeStream.foreachBatch(_process), checkpoint_dir
     )

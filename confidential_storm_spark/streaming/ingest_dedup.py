@@ -40,6 +40,9 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
+
+from ._drain import run_available_now
 
 __all__ = [
     "neardup_ingest_stream",
@@ -196,20 +199,15 @@ def neardup_ingest_stream(
     survivors_path: str,
     checkpoint_dir: str,
     **dials,
-):
+) -> StreamingQuery:
     """Wire :func:`process_ingest_batch` onto a streaming document
-    source.  Returns the started StreamingQuery; the caller owns
-    awaitTermination/stop."""
+    source.  Drains all available input and returns the terminated
+    StreamingQuery."""
 
     def _process(batch: DataFrame, epoch_id: int) -> None:
         process_ingest_batch(batch, index_path, survivors_path, **dials)
 
-    return (
-        docs.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return run_available_now(docs.writeStream.foreachBatch(_process), checkpoint_dir)
 
 
 def process_curated_batch(
@@ -276,9 +274,10 @@ def curated_ingest_stream(
     rejects_path: str | None = None,
     min_score: float = 0.0,
     **dials,
-):
+) -> StreamingQuery:
     """Quality-gate + near-dedup curation as one streaming pipeline.
-    Returns the started StreamingQuery."""
+    Drains all available input and returns the terminated
+    StreamingQuery."""
 
     def _process(batch: DataFrame, epoch_id: int) -> None:
         process_curated_batch(
@@ -291,9 +290,4 @@ def curated_ingest_stream(
             **dials,
         )
 
-    return (
-        docs.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return run_available_now(docs.writeStream.foreachBatch(_process), checkpoint_dir)

@@ -101,11 +101,14 @@ def replay_available_now(
     another -14% going 4 -> 2).  ``None`` (the default) derives the
     count from the replay input's size — ``clamp(rows /
     50_000, 2, session setting)`` — so small certification corpora pay
-    few state stores while a large replay converges back to the
-    session's batch-scale setting instead of a constant tuned for
-    either.  The pinned value is restored afterwards.  Results are
-    partition-count-invariant (that is exactly what the replayed
-    operators' determinism contract says), only the overhead changes.
+    few state stores while a large replay grows with its input instead
+    of a constant tuned for either.  The pinned value is restored
+    afterwards.  ``run_available_now`` caps it at the task slots
+    (``sparkContext.defaultParallelism``) when the query starts, so a
+    large replay, or an explicit value above the slots, runs at the
+    slot count.  Results are partition-count-invariant (that is exactly
+    what the replayed operators' determinism contract says), only the
+    overhead changes.
 
     Work-dir placement: the replay's epoch source, checkpoint (offset/
     commit logs) and state-store deltas are all small, short-lived
@@ -146,8 +149,7 @@ def replay_available_now(
             # A/B at sf0.1 (4 -> 2 partitions on the five heaviest
             # replays) measured -14% wall with row-identical output —
             # the replayed operators are partition-count invariant by
-            # contract.  A large replay still converges to the
-            # session's batch-scale setting.
+            # contract.
             shuffle_partitions = max(2, min(int(prev_parts), n_rows // 50_000))
         spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
         # the trailing no-data micro-batch is a provable no-op for

@@ -7,6 +7,7 @@ import zlib
 import numpy as np
 import pytest
 
+from confidential_storm_spark.streaming._drain import run_available_now
 from confidential_storm_spark.streaming.heavy_hitters import (
     heavy_hitters_stream,
     mg_merge,
@@ -66,14 +67,12 @@ def test_heavy_hitters_stream_invariants(spark, tmp_path):
     )
 
     out: list = []
-    q = (
+    run_available_now(
         heavy_hitters_stream(stream, "word", capacity=16, num_shards=4)
         .writeStream.outputMode("update")
-        .foreachBatch(lambda df, bid: out.append((bid, df.collect())))
-        .trigger(availableNow=True)
-        .start()
+        .foreachBatch(lambda df, bid: out.append((bid, df.collect()))),
+        str(tmp_path / "ckpt"),
     )
-    q.awaitTermination(240)
 
     # latest emission per shard is its current summary
     latest: dict[int, list] = {}
@@ -106,14 +105,12 @@ def test_heavy_hitters_stream_invariants(spark, tmp_path):
     stream2 = (
         spark.readStream.schema("word string").option("maxFilesPerTrigger", 1).parquet(src)
     )
-    q2 = (
+    run_available_now(
         heavy_hitters_stream(stream2, "word", capacity=100, num_shards=2)
         .writeStream.outputMode("update")
-        .foreachBatch(lambda df, bid: out2.append((bid, df.collect())))
-        .trigger(availableNow=True)
-        .start()
+        .foreachBatch(lambda df, bid: out2.append((bid, df.collect()))),
+        str(tmp_path / "ckpt2"),
     )
-    q2.awaitTermination(240)
     latest2: dict[int, list] = {}
     for _bid, rows in out2:
         for shard in {r["shard"] for r in rows}:

@@ -28,8 +28,7 @@ def test_ann_ingest_stream_appends_every_batch(spark, sf_dir, tmp_path):
     src = str(tmp_path / "feed")
     feed.repartition(4).write.parquet(src)
     stream = spark.readStream.schema(emb.schema).option("maxFilesPerTrigger", 1).parquet(src)
-    q = ann_ingest_stream(stream, path, str(tmp_path / "ckpt"))
-    q.awaitTermination(240)
+    ann_ingest_stream(stream, path, str(tmp_path / "ckpt"))
 
     vec = spark.read.parquet(f"{path}/vectors")
     ids = [r["vec_id"] for r in vec.select("vec_id").collect()]
@@ -61,8 +60,7 @@ def test_ann_ingest_stream_compressed(spark, tmp_path):
     src = str(tmp_path / "feed")
     feed.repartition(2).write.parquet(src)
     stream = spark.readStream.schema(df.schema).option("maxFilesPerTrigger", 1).parquet(src)
-    q = ann_ingest_stream(stream, path, str(tmp_path / "ckpt"), compressed=True)
-    q.awaitTermination(240)
+    ann_ingest_stream(stream, path, str(tmp_path / "ckpt"), compressed=True)
 
     stored = {
         r["vec_id"]: list(r["pq_code"])
@@ -100,8 +98,7 @@ def test_ann_ingest_replay_is_idempotent(spark, tmp_path):
             .option("maxFilesPerTrigger", 1)
             .parquet(src)
         )
-        q = ann_ingest_stream(stream, path, ck, idempotent=flag)
-        q.awaitTermination(240)
+        ann_ingest_stream(stream, path, ck, idempotent=flag)
 
     def feed_rows(path):
         return (

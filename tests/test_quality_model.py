@@ -186,6 +186,7 @@ def test_score_expr_streams_statelessly(spark, tmp_path):
     # train in batch, score a stream: the expression is a pure map,
     # so availableNow micro-batches reproduce the batch scores exactly
     from confidential_storm_spark.operators.quality_model import quality_score_expr
+    from confidential_storm_spark.streaming._drain import run_available_now
 
     docs = _mk(spark, _CORPUS)
     w = linear_probe_train(hashed_tf_features(docs, dim=64), rule_labels(docs), dim=64, n_iters=3)
@@ -197,13 +198,10 @@ def test_score_expr_streams_statelessly(spark, tmp_path):
         .parquet(src)
         .select("doc_id", quality_score_expr(w).alias("s"))
     )
-    q = (
-        stream.writeStream.format("memory")
-        .queryName("qscores")
-        .trigger(availableNow=True)
-        .start()
+    run_available_now(
+        stream.writeStream.format("memory").queryName("qscores"),
+        str(tmp_path / "ckpt"),
     )
-    q.awaitTermination(120)
     got = {r.doc_id: r.s for r in spark.sql("select * from qscores").collect()}
     batch = {
         r.doc_id: r.s

@@ -7,6 +7,7 @@ T1-T3).  Results are gathered via foreachBatch into a driver list.
 """
 
 import pickle
+import tempfile
 
 import pytest
 
@@ -16,16 +17,19 @@ from confidential_storm_spark.streaming import (
     dp_histogram_stream,
     replay_filter_stream,
 )
+from confidential_storm_spark.streaming._drain import run_available_now
 
 
 def _run_stream(stream_df, out: list, mode: str = "update"):
-    q = (
-        stream_df.writeStream.outputMode(mode)
-        .foreachBatch(lambda df, bid: out.append((bid, df.collect())))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
+    """Drain ``stream_df`` into ``out`` as (batch_id, rows) pairs and
+    return the terminated query."""
+    with tempfile.TemporaryDirectory() as ckpt:
+        return run_available_now(
+            stream_df.writeStream.outputMode(mode).foreachBatch(
+                lambda df, bid: out.append((bid, df.collect()))
+            ),
+            ckpt,
+        )
 
 
 def _write_batches(spark, tmpdir, batches, schema):
@@ -113,14 +117,67 @@ def test_streaming_bounding_across_batches(stream_reader):
 def test_available_now_timeout_stops_query(spark, stream_reader, tmp_path):
     """A stage that outlives its wait is stopped and raises, instead of
     being taken as finished while it still writes its handoff."""
-    from confidential_storm_spark.streaming._drain import run_available_now
-
     before = {q.id for q in spark.streams.active}
     stream = stream_reader([[("u1", "a", 1.0, i)] for i in range(3)], SCHEMA)
     writer = stream.writeStream.foreachBatch(lambda df, bid: df.collect())
     with pytest.raises(TimeoutError):
         run_available_now(writer, str(tmp_path / "ckpt"), timeout_s=0.001)
     assert {q.id for q in spark.streams.active} == before
+
+
+def test_available_now_caps_new_state_partitions(spark, tmp_path):
+    """A new checkpoint starts with one state partition per task slot,
+    the session keeps its own setting, and a checkpoint started at a
+    larger count resumes with that count and the same results."""
+    key = "spark.sql.shuffle.partitions"
+    slots = spark.sparkContext.defaultParallelism
+    src = str(tmp_path / "src")
+
+    def write(lo, hi):
+        spark.range(lo, hi).selectExpr("id % 5 AS k").write.mode("append").parquet(src)
+
+    def counts_writer(out: dict):
+        return (
+            spark.readStream.schema("k long").parquet(src).groupBy("k").count()
+            .writeStream.outputMode("update")
+            .foreachBatch(lambda df, bid: out.update({r.k: r["count"] for r in df.collect()}))
+        )
+
+    def state_partitions(q):
+        return {
+            p["stateOperators"][0]["numShufflePartitions"]
+            for p in q.recentProgress
+            if p["stateOperators"]
+        }
+
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "8")
+    try:
+        write(0, 40)
+        capped: dict = {}
+        q = run_available_now(counts_writer(capped), str(tmp_path / "new"))
+        assert state_partitions(q) == {slots} and slots < 8
+        assert spark.conf.get(key) == "8"
+
+        old, direct = str(tmp_path / "old"), {}
+        q = (
+            counts_writer(direct)
+            .option("checkpointLocation", old)
+            .trigger(availableNow=True)
+            .start()
+        )
+        assert q.awaitTermination(120)
+        assert state_partitions(q) == {8}
+
+        write(40, 100)
+        q = run_available_now(counts_writer(direct), old)
+        assert state_partitions(q) == {8}
+        q = run_available_now(counts_writer(capped), str(tmp_path / "new"))
+        assert state_partitions(q) == {slots}
+        assert capped == direct == {k: 20 for k in range(5)}
+        assert spark.conf.get(key) == "8"
+    finally:
+        spark.conf.set(key, prev)
 
 
 def test_streaming_replay_window(stream_reader):
@@ -199,26 +256,25 @@ def test_streaming_dp_recovery_from_checkpoint(spark, tmp_path):
             spark.readStream.schema(SCHEMA).option("maxFilesPerTrigger", 1).parquet(src)
         )
 
-    def start(out):
+    def drain(out):
         stream = dp_histogram_stream(
             reader(), DPParams.zero_noise(t=10, mu=0), num_buckets=1
         )
-        return (
-            stream.writeStream.outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .foreachBatch(lambda df, bid: out.append((bid, df.collect())))
-            .trigger(availableNow=True)
-            .start()
+        run_available_now(
+            stream.writeStream.outputMode("update").foreachBatch(
+                lambda df, bid: out.append((bid, df.collect()))
+            ),
+            ckpt,
         )
 
     # phase 1: two epochs, then the query stops (availableNow drains)
     write(0); write(1)
     out1: list = []
-    q = start(out1); q.awaitTermination(120)
+    drain(out1)
     # phase 2: more data arrives while "down"; restart from checkpoint
     write(2); write(3)
     out2: list = []
-    q = start(out2); q.awaitTermination(120)
+    drain(out2)
 
     final = {r["key"]: r["count"] for _, rows in out2 for r in rows}
     epochs1 = sorted({r["epoch"] for _, rows in out1 for r in rows})
@@ -423,13 +479,7 @@ def test_streaming_bloom_dedup_flags_cross_batch(stream_reader):
         m_per_bucket=M,
         order_col="doc_id",
     )
-    q = (
-        stream.writeStream.outputMode("append")
-        .foreachBatch(lambda df, bid: out.append((bid, df.collect())))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
+    q = _run_stream(stream, out, mode="append")
 
     flags = {r["doc_id"]: r["maybe_dup"] for _, rows in out for r in rows}
     assert len(flags) == 8  # flag-don't-drop: every row is emitted
@@ -485,13 +535,7 @@ def test_streaming_session_window_merges_and_finalizes(stream_reader):
     stream = session_stats_stream(
         stream_reader(batches, SCHEMA_S), gap="10 minutes", watermark_delay="5 minutes"
     )
-    q = (
-        stream.writeStream.outputMode("append")
-        .foreachBatch(lambda df, bid: out.append((bid, df.collect())))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
+    _run_stream(stream, out, mode="append")
     rows = sorted(
         ((r.user_id, r.n_events, r.sum_value) for _, rs in out for r in rs)
     )
@@ -539,13 +583,7 @@ def test_streaming_hll_matches_batch_sketch(stream_reader, spark):
         window="1 minute",
         watermark_delay="30 seconds",
     )
-    q = (
-        stream.writeStream.outputMode("append")
-        .foreachBatch(lambda df, bid: out.append((bid, df.collect())))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
+    _run_stream(stream, out, mode="append")
     got = {
         (r.window_start, r.event_type): r.approx_distinct
         for _, rows in out
@@ -606,13 +644,7 @@ def test_streaming_quantiles_match_batch_sketch(stream_reader, spark):
         window="1 minute",
         watermark_delay="30 seconds",
     )
-    q = (
-        stream.writeStream.outputMode("append")
-        .foreachBatch(lambda df, bid: out.append((bid, df.collect())))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
+    _run_stream(stream, out, mode="append")
     got = {
         (r.window_start, r.q): r.est for _, rows in out for r in rows
     }
@@ -657,13 +689,7 @@ def test_streaming_quantiles_per_key(stream_reader, spark):
         watermark_delay="30 seconds",
         key_cols=["etype"],
     )
-    q = (
-        stream.writeStream.outputMode("append")
-        .foreachBatch(lambda df, bid: out.append((bid, df.collect())))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
+    _run_stream(stream, out, mode="append")
     got = {(r.etype, r.q): r.est for _, rows in out for r in rows if r.window_start == t(0)}
     all_rows = [r for b in batches[:2] for r in b]
     df = spark.createDataFrame(all_rows, SCHEMA_K)
@@ -714,13 +740,7 @@ def test_streaming_vocab_kl_drift(stream_reader, spark):
         window="1 minute",
         watermark_delay="30 seconds",
     )
-    q = (
-        stream.writeStream.outputMode("append")
-        .foreachBatch(lambda df, bid: out.append((bid, df.collect())))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
+    _run_stream(stream, out, mode="append")
     got = {r.window_start: (r.n_tokens, r.kl) for _, rows in out for r in rows}
     assert t(0) in got and t(60) in got
 
@@ -771,7 +791,7 @@ def test_hashed_ref_probs_spark_matches_python(spark):
         assert sp == py
 
 
-def test_reservoir_kmin_stream_is_batch_equivalent(stream_reader, spark):
+def test_reservoir_kmin_stream_is_batch_equivalent(stream_reader, tmp_path):
     """The streaming k-min reservoir equals the batch k-min sample of
     the union of all batches, whatever the chopping — including a
     late batch displacing an earlier reservoir member by hash order."""
@@ -783,18 +803,16 @@ def test_reservoir_kmin_stream_is_batch_equivalent(stream_reader, spark):
     rows = [("s1", i) for i in range(40)] + [("s2", i + 1000) for i in range(30)]
     batches = [rows[:10], rows[10:45], rows[45:]]
     out: dict = {}
-    q = (
+    run_available_now(
         reservoir_kmin_stream(stream_reader(batches, SCHEMA), "source", "doc_id", k=4)
         .writeStream.outputMode("update")
         .foreachBatch(
             lambda df, bid: out.update(
                 {(r.key, r.rank): r.sampled_id for r in df.collect()}
             )
-        )
-        .trigger(availableNow=True)
-        .start()
+        ),
+        str(tmp_path / "ckpt"),
     )
-    q.awaitTermination(180)
 
     def kmin(src):
         ids = [i for s, i in rows if s == src]

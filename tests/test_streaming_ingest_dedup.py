@@ -62,10 +62,7 @@ def test_ingest_dedup_invariants(spark, sf_dir, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    q = neardup_ingest_stream(
-        stream, index, out, str(tmp_path / "ckpt"), **DIALS
-    )
-    q.awaitTermination(300)
+    neardup_ingest_stream(stream, index, out, str(tmp_path / "ckpt"), **DIALS)
 
     survivors = {r["doc_id"] for r in spark.read.parquet(out).collect()}
     all_ids = {
@@ -167,7 +164,7 @@ def test_curated_ingest_gates_quality_then_dedups(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    q = curated_ingest_stream(
+    curated_ingest_stream(
         stream,
         w,
         str(tmp_path / "index"),
@@ -177,7 +174,6 @@ def test_curated_ingest_gates_quality_then_dedups(spark, tmp_path):
         min_score=thr,
         **DIALS,
     )
-    q.awaitTermination(240)
 
     surv = {r.doc_id for r in spark.read.parquet(str(tmp_path / "survivors")).collect()}
     rej = {

@@ -6,11 +6,13 @@ call on the batch DataFrames — the batch call exercises the identical
 join condition with watermarks compiled out.
 """
 
+import tempfile
 from datetime import datetime
 
 import pytest
 
 from confidential_storm_spark.streaming import enrich_stream, interval_join_streams
+from confidential_storm_spark.streaming._drain import run_available_now
 
 SCHEMA = "user_id string, ts timestamp, value double"
 
@@ -34,15 +36,15 @@ def _read_stream(spark, src):
     )
 
 
-def _run_append(df, timeout=120):
+def _run_append(df):
     out = []
-    q = (
-        df.writeStream.outputMode("append")
-        .foreachBatch(lambda bdf, bid: out.extend(bdf.collect()))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(timeout)
+    with tempfile.TemporaryDirectory() as ckpt:
+        run_available_now(
+            df.writeStream.outputMode("append").foreachBatch(
+                lambda bdf, bid: out.extend(bdf.collect())
+            ),
+            ckpt,
+        )
     return out
 
 

@@ -12,11 +12,14 @@ Covers the VERDICT r2 'done' criteria:
   StreamingDPMechanism.java:66's unbounded set).
 """
 
+from collections import Counter
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from confidential_storm_spark.operators.dp_batch import DPParams
+from confidential_storm_spark.streaming._drain import run_available_now
 from confidential_storm_spark.streaming.keyed import (
     _pack_state,
     _unpack_state,
@@ -85,6 +88,42 @@ def test_keyed_mu_gate_counts_new_users_only(spark, tmp_path):
     rows = [r for _, rs in res["batches"] for r in rs]
     assert all(r["epoch"] != 0 for r in rows)  # gate holds at epoch 0
     assert {(r["key"], r["epoch"], r["count"]) for r in rows} == {("k", 1, 7)}
+
+
+def test_keyed_noisy_release_is_partition_invariant(spark, tmp_path):
+    """With a fixed seed and non-zero noise, the released rows are the
+    same at 1 and 4 state partitions: each key's noise is drawn from
+    (seed, key, epoch), never from the state layout."""
+    rng = np.random.default_rng(3)
+    batches = [
+        [(f"u{u}", f"k{rng.integers(6)}", 1.0, 100 * e + u) for u in range(40)]
+        for e in range(3)
+    ]
+    p = DPParams(1.0, 2.0, 0.5, 10, 0, 32, seed=11)
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+
+    def released(parts):
+        spark.conf.set(key, str(parts))
+        try:
+            src = str(tmp_path / f"src{parts}")
+            for i, rows in enumerate(batches):
+                _write_batch(spark, src, rows, first=i == 0)
+            res = run_keyed_dp_available_now(
+                spark, _reader(spark, src), p, str(tmp_path / f"wd{parts}"), SCHEMA
+            )
+        finally:
+            spark.conf.set(key, prev)
+        assert {pr["numShufflePartitions"] for pr in res["progress"]["dp"]} == {parts}
+        return sorted(
+            (r["key"], r["count"], r["epoch"]) for _, rows in res["batches"] for r in rows
+        )
+
+    one, four = released(1), released(4)
+    assert one == four
+    # the noise is real: some release is off its exact running total
+    exact = [Counter(r[1] for rows in batches[: e + 1] for r in rows) for e in range(3)]
+    assert one and any(c != exact[e][k] for k, c, e in one)
 
 
 def test_keyed_recovery_from_checkpoint(spark, tmp_path):
@@ -254,15 +293,12 @@ def test_keyed_late_epoch_folds_into_current_step(spark, tmp_path):
         .parquet(prev_dir)
     )
     out: list = []
-    q = (
+    run_available_now(
         dp_histogram_stream_keyed(stream, DPParams.zero_noise(t=10, mu=0))
         .writeStream.outputMode("update")
-        .foreachBatch(lambda df, bid: out.append((bid, df.collect())))
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
+        .foreachBatch(lambda df, bid: out.append((bid, df.collect()))),
+        str(tmp_path / "ckpt"),
     )
-    q.awaitTermination(120)
     rows = [(r["key"], r["count"], r["epoch"]) for _, rs in out for r in rs]
     # epoch 2 processed at step 2 (count 5); the late epoch-0 partial
     # folds into step 3 (cumulative 8) — NOT labeled epoch 0
@@ -293,15 +329,12 @@ def test_keyed_output_feeds_histogram_sink(spark, tmp_path):
         .parquet(prev_dir)
     )
     out_dir = str(tmp_path / "hist")
-    q = (
+    run_available_now(
         dp_histogram_stream_keyed(stream, DPParams.zero_noise(t=10, mu=0))
         .writeStream.outputMode("update")
-        .foreachBatch(histogram_file_sink(out_dir))
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
+        .foreachBatch(histogram_file_sink(out_dir)),
+        str(tmp_path / "ckpt"),
     )
-    q.awaitTermination(120)
     lines = open(f"{out_dir}/histogram.txt").read().splitlines()
     assert lines[1:] == ["hot:6", "late:3", "cold:1"]  # desc, latest epoch won
 

@@ -2,8 +2,10 @@
 computation; watermark finalizes windows exactly once; top-k release
 ranks deterministically."""
 
+import tempfile
 from datetime import datetime
 
+from confidential_storm_spark.streaming._drain import run_available_now
 from confidential_storm_spark.streaming.trending import (
     top_k_per_window,
     windowed_wordcounts_stream,
@@ -35,13 +37,13 @@ def _write(spark, base, batches):
 
 def _run_append(df):
     out = []
-    q = (
-        df.writeStream.outputMode("append")
-        .foreachBatch(lambda bdf, bid: out.extend(bdf.collect()))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
+    with tempfile.TemporaryDirectory() as ckpt:
+        run_available_now(
+            df.writeStream.outputMode("append").foreachBatch(
+                lambda bdf, bid: out.extend(bdf.collect())
+            ),
+            ckpt,
+        )
     return out
 
 

@@ -68,8 +68,7 @@ def main() -> int:
     feed.repartition(4).write.parquet(src)
     t0 = time.time()
     stream = spark.readStream.schema(emb.schema).option("maxFilesPerTrigger", 1).parquet(src)
-    q = ann_ingest_stream(stream, path, f"{work}/ckpt")
-    q.awaitTermination()
+    ann_ingest_stream(stream, path, f"{work}/ckpt")
     record("stream", time.time() - t0, n_feed, "4 micro-batches, idempotent ledger")
 
     t0 = time.time()

@@ -97,8 +97,7 @@ def main() -> int:
     stream = (
         spark.readStream.schema(feed.schema).option("maxFilesPerTrigger", 1).parquet(src)
     )
-    q = ann_ingest_stream(stream, path, f"{work}/ckpt")
-    q.awaitTermination()
+    ann_ingest_stream(stream, path, f"{work}/ckpt")
     record("ingest", time.time() - t0,
            f"{len(drifted)} drifted vectors, 4 micro-batches")
 

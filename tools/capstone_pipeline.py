@@ -244,7 +244,6 @@ def main() -> int:
         min_score=min_score,
         **DIALS,
     )
-    q.awaitTermination()
     wall_ingest = time.time() - t0
     monitor_rows: list[dict] = []
     for name, (mq, collected) in monitor_qs.items():
