@@ -5,7 +5,9 @@ Mirrors the reference's enclave DP package:
                  confidentialstorm/enclave/.../dp/BinaryAggregationTree.java)
 - calibration.py DPUtil noise calibration (ref .../util/DPUtil.java)
 - mechanism.py   StreamingDPMechanism (Algorithms 1-3, ref
-                 .../dp/StreamingDPMechanism.java)
+                 .../dp/StreamingDPMechanism.java), which packs its own
+                 per-key state rows, and DPParams, whose ``mechanism``
+                 is the one construction site (and noise seeding)
 - bounding.py    UserContributionLimiter (ref .../dp/UserContributionLimiter.java)
 - zipf.py        Zipf-Mandelbrot sampler (ref examples/synthetic-benchmark-
                  baseline/.../util/ZipfMandelbrotDistribution.java)
@@ -27,13 +29,14 @@ from .calibration import (
     l1_sensitivity,
     threshold_quantile,
 )
-from .mechanism import StreamingDPMechanism
+from .mechanism import DPParams, StreamingDPMechanism
 from .bounding import UserContributionLimiter
 from .zipf import ZipfMandelbrot
 
 __all__ = [
     "BinaryAggregationTree",
     "CompositionMode",
+    "DPParams",
     "DpCalibration",
     "PerRoundBudget",
     "StreamingDPMechanism",

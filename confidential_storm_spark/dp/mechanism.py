@@ -23,13 +23,16 @@ keep the reference's exact call protocol for test parity.
 
 from __future__ import annotations
 
+import dataclasses
 import math
+import secrets
 
 import numpy as np
 
+from .calibration import CompositionMode, calibrate
 from .tree import BinaryAggregationTree
 
-__all__ = ["StreamingDPMechanism"]
+__all__ = ["DPParams", "StreamingDPMechanism"]
 
 
 def _java_round(x: float) -> int:
@@ -133,6 +136,49 @@ class StreamingDPMechanism:
         for prev, n in prev_counts:
             prev = int(prev)
             pc[prev] = pc.get(prev, 0) + int(n)
+
+    # ------------------------------------------------------------------
+    # per-key state rows (the per-key stream's checkpointed state)
+    # ------------------------------------------------------------------
+    def key_state(self, key: str) -> tuple:
+        """One key's release state as a fixed-layout row: the
+        key-selection and histogram trees as raw float64 bytes (``b""``
+        when absent), then ``time_step``, ``round_start``, the
+        unreleased delta-V, the released sum and the predicted release
+        step (``-1`` for none).  No user ids: the row covers the
+        :meth:`add_window_prev_counts` path, whose state is O(T) per key
+        whatever the user count.  Read back by :meth:`load_key_state`."""
+        ks = self._key_selection_forest.get(key)
+        hist = self._histogram_forest.get(key)
+        return (
+            b"" if ks is None else ks.tree.tobytes(),
+            b"" if hist is None else hist.tree.tobytes(),
+            int(self.time_step),
+            int(self._round_start.get(key, 0)),
+            float(self._unreleased_buffer.get(key, 0.0)),
+            float(self._current_sums.get(key, 0.0)),
+            int(self._predicted_release_times.get(key, -1)),
+        )
+
+    def load_key_state(self, key: str, row) -> None:
+        """Restore ``key``'s state (and the step counter) from a
+        :meth:`key_state` row; draws no noise."""
+        ks, hist, time_step, round_start, unreleased, current_sum, predicted = row
+        self.time_step = int(time_step)
+        self._round_start[key] = int(round_start)
+        if unreleased:
+            self._unreleased_buffer[key] = float(unreleased)
+        if ks:
+            self._key_selection_forest[key] = BinaryAggregationTree.from_array(
+                np.frombuffer(ks, dtype=np.float64), self.sigma_key
+            )
+        if hist:
+            self._histogram_forest[key] = BinaryAggregationTree.from_array(
+                np.frombuffer(hist, dtype=np.float64), self.sigma_hist
+            )
+            self._current_sums[key] = float(current_sum)
+        if predicted >= 0:
+            self._predicted_release_times[key] = int(predicted)
 
     # ------------------------------------------------------------------
     # snapshot (one triggering time)
@@ -275,3 +321,90 @@ class StreamingDPMechanism:
         self._window_users.clear()
         self._window_prev_counts.clear()
         self._round_start.clear()
+
+
+@dataclasses.dataclass(frozen=True)
+class DPParams:
+    """Mechanism parameters (mirrors the reference's DPConfig +
+    calibration output); :meth:`mechanism` builds every release's
+    :class:`StreamingDPMechanism`.
+
+    ``seed=None`` is the only safe production setting: a fixed, known
+    seed makes the Gaussian tree noise predictable and subtractable,
+    voiding the DP guarantee (the reference uses SecureRandom), so pass
+    one ONLY for tests and benchmarks.  With ``None``, each release
+    entry point pins one 128-bit secret on the driver when it builds
+    its plan (:meth:`for_release`): a second action, a task retry or a
+    re-executed micro-batch of that plan re-draws the same noise.  The
+    secret is not checkpointed: a stream restarted in a new driver
+    draws a new one, so a batch re-run after a crash can still re-draw
+    noise for the trees it creates."""
+
+    sigma_key: float
+    sigma_hist: float
+    threshold_quantile: float
+    max_time_steps: int
+    mu: int
+    max_contributions_per_user: int
+    per_record_clamp: float = 1.0
+    seed: int | None = None
+
+    @classmethod
+    def from_budget(
+        cls,
+        epsilon: float,
+        delta: float,
+        c: int,
+        t: int,
+        mu: int,
+        per_record_clamp: float = 1.0,
+        alpha: float = 0.5,
+        composition: CompositionMode = CompositionMode.ZCDP_LINEAR,
+        seed: int | None = None,
+    ) -> "DPParams":
+        """Paper budget split: eps_k = eps_h = eps/2, delta_k = 2delta/3,
+        delta_h = delta/3 (ref DataPerturbationServiceProvider.java:14-35)."""
+        cal = calibrate(
+            composition, epsilon / 2, delta * 2 / 3, epsilon / 2, delta / 3,
+            c, t, per_record_clamp, alpha,
+        )
+        return cls(
+            sigma_key=cal.sigma_key,
+            sigma_hist=cal.sigma_hist,
+            threshold_quantile=cal.threshold_quantile,
+            max_time_steps=t,
+            mu=mu,
+            max_contributions_per_user=c,
+            per_record_clamp=per_record_clamp,
+            seed=seed,
+        )
+
+    @classmethod
+    def zero_noise(cls, t: int, mu: int = 0, c: int = 32, clamp: float = 1.0) -> "DPParams":
+        """Deterministic oracle mode (sigma=0), the reference's
+        keystone test fixture (StreamingDPMechanismTest:84-86)."""
+        return cls(0.0, 0.0, 4.2649, t, mu, c, clamp)
+
+    def for_release(self) -> "DPParams":
+        """These parameters with the seed pinned for one release: self
+        when seeded, else a copy seeded with a fresh 128-bit secret."""
+        if self.seed is not None:
+            return self
+        return dataclasses.replace(self, seed=secrets.randbits(128))
+
+    def mechanism(self, *stream_id: int) -> StreamingDPMechanism:
+        """A fresh mechanism whose noise stream is
+        ``default_rng((seed, *stream_id))``: one stream per bucket
+        ``(bucket_id,)`` or per key and batch ``(crc32(key),
+        first_epoch)``.  Needs a seed (see :meth:`for_release`)."""
+        if self.seed is None:
+            raise ValueError("DPParams.mechanism needs a seed; call for_release() first")
+        return StreamingDPMechanism(
+            self.sigma_key,
+            self.sigma_hist,
+            self.threshold_quantile,
+            self.max_time_steps,
+            self.mu,
+            self.max_contributions_per_user,
+            rng=np.random.default_rng((self.seed, *stream_id)),
+        )

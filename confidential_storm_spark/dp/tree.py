@@ -67,16 +67,32 @@ class BinaryAggregationTree:
     def __init__(self, n: int, sigma: float, rng: np.random.Generator | None = None):
         if n <= 0:
             raise ValueError("n must be positive")
-        self.height = max(0, math.ceil(math.log2(n)))
-        self.num_leaves = 1 << self.height
-        self.sigma = float(sigma)
-        size = 2 * self.num_leaves - 1
+        size = 2 * (1 << max(0, math.ceil(math.log2(n)))) - 1
         if sigma == 0.0:
-            self.tree = np.zeros(size, dtype=np.float64)
+            values = np.zeros(size, dtype=np.float64)
         else:
             if rng is None:
                 rng = np.random.default_rng()
-            self.tree = rng.normal(0.0, sigma, size)
+            values = rng.normal(0.0, sigma, size)
+        self._bind(values, sigma)
+
+    @classmethod
+    def from_array(cls, values, sigma: float) -> "BinaryAggregationTree":
+        """Rebuild a tree from a copy of its flat heap array (e.g. a
+        checkpointed ``tree.tobytes()``) without drawing noise."""
+        values = np.array(values, dtype=np.float64)
+        size = len(values) + 1
+        if size < 2 or size & (size - 1):
+            raise ValueError(f"{len(values)} values is not a complete binary tree")
+        tree = cls.__new__(cls)
+        tree._bind(values, sigma)
+        return tree
+
+    def _bind(self, values: np.ndarray, sigma: float) -> None:
+        self.num_leaves = (len(values) + 1) // 2
+        self.height = self.num_leaves.bit_length() - 1
+        self.sigma = float(sigma)
+        self.tree = values
         self._variances = self._shared_variances(self.num_leaves, self.height, self.sigma)
         self._weights = self._shared_weights(self.num_leaves, self.height)
 
@@ -92,9 +108,6 @@ class BinaryAggregationTree:
             idx = (idx - 1) >> 1
         tree[0] += x
 
-    # alias matching the reference naming (Algorithm 4 steps 2-10)
-    add_to_tree = add
-
     # ------------------------------------------------------------------
     # queries
     # ------------------------------------------------------------------
@@ -102,16 +115,11 @@ class BinaryAggregationTree:
         """DP prefix sum over leaves ``[0, i]`` with Honaker reduction."""
         return float(self._weights[i] @ self.tree)
 
-    get_total_sum = prefix_sum
-
     def prefix_sums_from(self, start: int) -> np.ndarray:
         """Vector of prefix sums for leaves ``start .. num_leaves-1`` in
         one matvec — the whole-future scan of the empty-key release
         prediction (Algorithm 3) in one shot."""
         return self._weights[start:] @ self.tree
-
-    def variances_from(self, start: int) -> np.ndarray:
-        return self._variances[start:]
 
     def prefix_sum_reference(self, i: int) -> float:
         """Traversal implementation (mirrors the reference's
@@ -125,8 +133,6 @@ class BinaryAggregationTree:
     def variance(self, i: int) -> float:
         """Pre-computed Honaker total variance of ``prefix_sum(i)``."""
         return float(self._variances[i])
-
-    get_honaker_variance = variance
 
     # ------------------------------------------------------------------
     # internals

@@ -29,75 +29,13 @@ never O(events) or O(users).
 
 from __future__ import annotations
 
-from dataclasses import dataclass
-
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..dp.calibration import CompositionMode, calibrate
-from ..dp.mechanism import StreamingDPMechanism
+from ..dp.mechanism import DPParams
 
 __all__ = ["DPParams", "dp_histogram_batch"]
-
-
-@dataclass(frozen=True)
-class DPParams:
-    """Mechanism parameters (mirrors the reference's DPConfig +
-    calibration output).
-
-    ``seed`` defaults to ``None`` = fresh OS entropy per run, the only
-    safe production setting: with a fixed, known seed the Gaussian tree
-    noise is fully predictable and can be subtracted, voiding the DP
-    guarantee (the reference uses SecureRandom for exactly this
-    reason).  Pass an explicit seed ONLY for tests and benchmarks that
-    need reproducible noise."""
-
-    sigma_key: float
-    sigma_hist: float
-    threshold_quantile: float
-    max_time_steps: int
-    mu: int
-    max_contributions_per_user: int
-    per_record_clamp: float = 1.0
-    seed: int | None = None
-
-    @classmethod
-    def from_budget(
-        cls,
-        epsilon: float,
-        delta: float,
-        c: int,
-        t: int,
-        mu: int,
-        per_record_clamp: float = 1.0,
-        alpha: float = 0.5,
-        composition: CompositionMode = CompositionMode.ZCDP_LINEAR,
-        seed: int | None = None,
-    ) -> "DPParams":
-        """Paper budget split: eps_k = eps_h = eps/2, delta_k = 2delta/3,
-        delta_h = delta/3 (ref DataPerturbationServiceProvider.java:14-35)."""
-        cal = calibrate(
-            composition, epsilon / 2, delta * 2 / 3, epsilon / 2, delta / 3,
-            c, t, per_record_clamp, alpha,
-        )
-        return cls(
-            sigma_key=cal.sigma_key,
-            sigma_hist=cal.sigma_hist,
-            threshold_quantile=cal.threshold_quantile,
-            max_time_steps=t,
-            mu=mu,
-            max_contributions_per_user=c,
-            per_record_clamp=per_record_clamp,
-            seed=seed,
-        )
-
-    @classmethod
-    def zero_noise(cls, t: int, mu: int = 0, c: int = 32, clamp: float = 1.0) -> "DPParams":
-        """Deterministic oracle mode (sigma=0), the reference's
-        keystone test fixture (StreamingDPMechanismTest:84-86)."""
-        return cls(0.0, 0.0, 4.2649, t, mu, c, clamp)
 
 
 def dp_histogram_batch(
@@ -162,26 +100,12 @@ def dp_histogram_batch(
         .withColumn("bucket", F.crc32(F.col(key_col).cast("string")) % num_buckets)
     )
 
-    p = params
+    p = params.for_release()
 
     def run_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
         if pdf.empty:
             return pd.DataFrame({"key": pd.Series(dtype=object), "count": pd.Series(dtype="int64")})
-        bucket_id = int(pdf["bucket"].iloc[0])
-        rng = (
-            np.random.default_rng((p.seed, bucket_id))
-            if p.seed is not None
-            else np.random.default_rng()
-        )
-        mech = StreamingDPMechanism(
-            p.sigma_key,
-            p.sigma_hist,
-            p.threshold_quantile,
-            p.max_time_steps,
-            p.mu,
-            p.max_contributions_per_user,
-            rng=rng,
-        )
+        mech = p.mechanism(int(pdf["bucket"].iloc[0]))
         by_epoch: dict[int, list[tuple[str, float, list]]] = {}
         for key, epoch, total, pc in zip(
             pdf[key_col], pdf[epoch_col], pdf["total"], pdf["new_user_counts"]

@@ -27,8 +27,8 @@ barrier provides):
    plus the user's PREVIOUS contribution epoch for that key and drops
    the user id.  State writes are O(pairs touched this batch); each
    state row is O(1) bytes (this is the streaming twin of the batch
-   path's ``add_window_prev_counts`` window scan,
-   dp/mechanism.py:121).
+   path's window scan,
+   ``StreamingDPMechanism.add_window_prev_counts``).
 3. :func:`dp_histogram_stream_keyed` — state keyed by **key**: the two
    aggregation trees as raw float64 bytes plus round scalars.  NO user
    ids anywhere in state; state size per key is O(T) regardless of how
@@ -54,9 +54,12 @@ per (key, user) pair, the per-bucket operator one blob per bucket.
 This pipeline stays because its state does not grow with the number
 of users.
 
-``transformWithStateInPandas`` (Spark 4's per-key state API) would
-collapse stage 3's packing boilerplate, but it cannot run in this
-container — root cause isolated (re-verified on Spark **4.1.2**,
+Stage 3's state row is packed and restored by the mechanism itself
+(``StreamingDPMechanism.key_state`` / ``load_key_state``), so this
+module holds no packing code.  ``transformWithStateInPandas`` (Spark
+4's per-key state API) would store that row as typed per-key value
+state, but it needs the ``protobuf`` Python package — root cause
+isolated (re-verified on Spark **4.1.2**,
 2026-08-17: ``import google.protobuf`` still raises
 ``ModuleNotFoundError``): the API's state-server protocol is
 protobuf-based, and
@@ -75,20 +78,16 @@ has no protobuf dependency.
 
 from __future__ import annotations
 
-import math
 import zlib
 from typing import Iterator
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from ..dp.mechanism import StreamingDPMechanism
-from ..dp.tree import BinaryAggregationTree
-from ..operators.dp_batch import DPParams
+from ..dp.mechanism import DPParams
 from ._drain import run_available_now
 
 __all__ = [
@@ -280,65 +279,11 @@ def prev_epoch_counts_stream(
 # stage 3: per-key DP mechanism state
 # ---------------------------------------------------------------------------
 
+# one StreamingDPMechanism.key_state row per key
 _KEYED_STATE_SCHEMA = (
     "ks_tree binary, hist_tree binary, time_step int, round_start int, "
     "unreleased double, current_sum double, predicted int"
 )
-
-
-def _tree_to_bytes(tree: BinaryAggregationTree | None) -> bytes:
-    return b"" if tree is None else tree.tree.tobytes()
-
-
-def _tree_from_bytes(buf: bytes, sigma: float) -> BinaryAggregationTree:
-    arr = np.frombuffer(buf, dtype=np.float64).copy()
-    t = BinaryAggregationTree.__new__(BinaryAggregationTree)
-    t.num_leaves = (len(arr) + 1) // 2
-    t.height = int(math.log2(t.num_leaves))
-    t.sigma = float(sigma)
-    t.tree = arr
-    t._variances = BinaryAggregationTree._shared_variances(t.num_leaves, t.height, t.sigma)
-    t._weights = BinaryAggregationTree._shared_weights(t.num_leaves, t.height)
-    return t
-
-
-def _pack_state(mech: StreamingDPMechanism, key: str) -> tuple:
-    """Mechanism -> one fixed-layout state row: trees as raw float64
-    bytes + round scalars.  NO user ids, NO pickled objects."""
-    return (
-        _tree_to_bytes(mech._key_selection_forest.get(key)),
-        _tree_to_bytes(mech._histogram_forest.get(key)),
-        int(mech.time_step),
-        int(mech._round_start.get(key, 0)),
-        float(mech._unreleased_buffer.get(key, 0.0)),
-        float(mech._current_sums.get(key, 0.0)),
-        int(mech._predicted_release_times.get(key, -1)),
-    )
-
-
-def _unpack_state(row: tuple, p: DPParams, key: str, rng) -> StreamingDPMechanism:
-    ks_b, hist_b, time_step, round_start, unreleased, current_sum, predicted = row
-    mech = StreamingDPMechanism(
-        p.sigma_key,
-        p.sigma_hist,
-        p.threshold_quantile,
-        p.max_time_steps,
-        p.mu,
-        p.max_contributions_per_user,
-        rng=rng,
-    )
-    mech.time_step = int(time_step)
-    mech._round_start[key] = int(round_start)
-    if unreleased:
-        mech._unreleased_buffer[key] = float(unreleased)
-    if ks_b is not None and len(ks_b):
-        mech._key_selection_forest[key] = _tree_from_bytes(bytes(ks_b), p.sigma_key)
-    if hist_b is not None and len(hist_b):
-        mech._histogram_forest[key] = _tree_from_bytes(bytes(hist_b), p.sigma_hist)
-        mech._current_sums[key] = float(current_sum)
-    if predicted >= 0:
-        mech._predicted_release_times[key] = int(predicted)
-    return mech
 
 
 def dp_histogram_stream_keyed(
@@ -351,43 +296,28 @@ def dp_histogram_stream_keyed(
     Per key and epoch: catch up silent epochs (due Algorithm-3
     predictions fire on their exact leaf), count new users from the
     prev-epoch counters (a user is new iff ``prev_epoch <
-    round_start`` — dp/mechanism.py:121, NO user ids needed), run the
-    key-selection gate, emit ``(key, count, epoch)`` when released.
+    round_start`` — ``StreamingDPMechanism.add_window_prev_counts``,
+    NO user ids needed), run the key-selection gate, emit ``(key,
+    count, epoch)`` when released.
 
     State per key = two O(T) trees + 5 scalars, independent of user
     cardinality; state writes per batch = keys touched, not keys held
     (both test-proven via the state-store metrics)."""
-    p = params
+    p = params.for_release()
 
     def process(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
         k = key[0]
-        # Fresh-noise rng per invocation; with a seed it is derived from
-        # (seed, key, first-epoch-of-batch) so a checkpoint replay of
-        # the same batch draws the same noise.
         chunks = [pdf for pdf in pdfs if len(pdf)]
         if not chunks:
             return
         pdf = pd.concat(chunks, ignore_index=True)
-        first_epoch = int(pdf["epoch"].min())
-        rng = (
-            np.random.default_rng((p.seed, zlib.crc32(k.encode()), first_epoch))
-            if p.seed is not None
-            else np.random.default_rng()
-        )
+        # the noise stream is derived from (seed, key, first epoch of
+        # the batch), so a replay of the same batch draws the same noise
+        mech = p.mechanism(zlib.crc32(k.encode()), int(pdf["epoch"].min()))
         if state.exists:
-            mech = _unpack_state(state.get, p, k, rng)
-        else:
-            mech = StreamingDPMechanism(
-                p.sigma_key,
-                p.sigma_hist,
-                p.threshold_quantile,
-                p.max_time_steps,
-                p.mu,
-                p.max_contributions_per_user,
-                rng=rng,
-            )
+            mech.load_key_state(k, state.get)
         out: list[tuple] = []
         for epoch, sub in pdf.groupby("epoch", sort=True):
             epoch = int(epoch)
@@ -409,7 +339,7 @@ def dp_histogram_stream_keyed(
                 # (T5/T6 late-partial semantics) and must not be
                 # labeled with the stale epoch
                 out.append((k, int(hist[k]), mech.time_step - 1))
-        state.update(_pack_state(mech, k))
+        state.update(mech.key_state(k))
         if out:
             yield pd.DataFrame(out, columns=["key", "count", "epoch"])
 

@@ -37,9 +37,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from ..dp.mechanism import StreamingDPMechanism
+from ..dp.mechanism import DPParams, StreamingDPMechanism
 from ..functions.replay import DEFAULT_WINDOW_SIZE, replay_accept
-from ..operators.dp_batch import DPParams
 
 __all__ = [
     "dp_histogram_stream",
@@ -94,28 +93,15 @@ def dp_histogram_stream(
     they force every bucket group to be invoked each micro-batch while
     contributing nothing to any histogram.
     """
-    p = params
+    p = params.for_release()
 
     def process(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
-        bucket_id = int(key[0])
         if state.exists:
             mech: StreamingDPMechanism = pickle.loads(state.get[0])
         else:
-            mech = StreamingDPMechanism(
-                p.sigma_key,
-                p.sigma_hist,
-                p.threshold_quantile,
-                p.max_time_steps,
-                p.mu,
-                p.max_contributions_per_user,
-                rng=(
-                    np.random.default_rng((p.seed, bucket_id))
-                    if p.seed is not None
-                    else np.random.default_rng()
-                ),
-            )
+            mech = p.mechanism(int(key[0]))
         # vectorized per-batch pre-aggregation (Spark forbids a real
         # aggregation before the stateful op — only ONE stateful
         # operator per query — so the windowing happens here in pandas

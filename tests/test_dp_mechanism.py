@@ -9,7 +9,7 @@ hot/cold key-selection gates (:228-264), sensitivity-1 user dedup
 import numpy as np
 import pytest
 
-from confidential_storm_spark.dp import StreamingDPMechanism, UserContributionLimiter
+from confidential_storm_spark.dp import DPParams, StreamingDPMechanism, UserContributionLimiter
 from confidential_storm_spark.dp.bounding import clamp
 
 T = 100
@@ -150,6 +150,75 @@ def test_budget_exhaustion_stops_mutation():
     m.add_contribution("u9", "k", 100.0)
     r = m.snapshot()
     assert r["k"] == 5
+
+
+def test_key_state_size_independent_of_users():
+    """No user ids in a key's state row: feed one key 10 vs 100,000
+    users and the row is the SAME SIZE (the trees depend on T only);
+    the row round-trips exactly and the restored mechanism evolves
+    identically afterwards."""
+    p = DPParams(0.0, 0.0, QUANTILE, 64, 0, 32, seed=0)
+
+    def row_size(n_users: int) -> int:
+        m = p.mechanism(0)
+        m.add_window_prev_counts("k", float(n_users), [(-1, n_users)])
+        m.snapshot()
+        row = m.key_state("k")
+        return sum(len(x) for x in row[:2]) + 8 * (len(row) - 2)
+
+    assert row_size(10) == row_size(100_000)
+    m = p.mechanism(0)
+    m.add_window_prev_counts("k", 7.0, [(-1, 7)])
+    m.snapshot()
+    row = m.key_state("k")
+    m2 = p.mechanism(0)
+    m2.load_key_state("k", row)
+    assert m2.key_state("k") == row
+    m.add_window_prev_counts("k", 3.0, [(-1, 2), (0, 1)])
+    m2.add_window_prev_counts("k", 3.0, [(-1, 2), (0, 1)])
+    assert m.snapshot() == m2.snapshot()
+
+
+def test_key_state_round_trip_keeps_noisy_trees():
+    """sigma > 0: a restored key holds both noisy trees bit-for-bit,
+    and its next snapshot matches the original's."""
+    p = DPParams(1.0, 2.0, QUANTILE, 16, 2, 32, seed=3)
+    m = p.mechanism(0)
+    m.add_window_prev_counts("k", 50.0, [(-1, 50)])
+    assert "k" in m.snapshot()  # released: histogram tree exists
+    m.add_window_prev_counts("k", 1.0, [(0, 1)])
+    m.snapshot()  # one repeat user: not released, new selection tree
+    row = m.key_state("k")
+    assert len(row[0]) == len(row[1]) == 31 * 8
+    assert row[5] != 50.0  # the released sum carries noise
+    m2 = p.mechanism(1)  # another noise stream: restoring draws nothing
+    m2.load_key_state("k", row)
+    assert m2.key_state("k") == row
+    for mech in (m, m2):
+        mech.add_window_prev_counts("k", 40.0, [(-1, 40)])
+    assert m.snapshot() == m2.snapshot()
+    assert m.key_state("k") == m2.key_state("k")
+
+
+def test_dpparams_mechanism_is_the_seeded_stream():
+    """``DPParams.mechanism(*ids)`` draws from ``default_rng((seed,
+    *ids))``; an unseeded DPParams must be pinned first, and pinning
+    draws a fresh secret per release."""
+    p = DPParams(1.0, 2.0, QUANTILE, 16, 0, 32, seed=7)
+    a = p.mechanism(3, 5)
+    b = StreamingDPMechanism(1.0, 2.0, QUANTILE, 16, 0, 32, rng=np.random.default_rng((7, 3, 5)))
+    for mech in (a, b):
+        for i in range(20):
+            mech.add_contribution(f"u{i}", "k", 1.0)
+    assert a.snapshot() == b.snapshot()
+    assert a.key_state("k") == b.key_state("k")
+    assert p.for_release() is p
+    unseeded = DPParams(1.0, 2.0, QUANTILE, 16, 0, 32)
+    with pytest.raises(ValueError):
+        unseeded.mechanism(0)
+    r1, r2 = unseeded.for_release(), unseeded.for_release()
+    assert r1.seed is not None and r1.seed != r2.seed
+    assert r1.mechanism(0).rng.normal() == r1.mechanism(0).rng.normal()
 
 
 def test_contribution_limiter():

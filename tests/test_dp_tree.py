@@ -61,6 +61,18 @@ def test_noise_reproducible_with_seed():
     assert t1.prefix_sum(13) == pytest.approx(t2.prefix_sum(13))
 
 
+def test_from_array_rebuilds_tree():
+    t = BinaryAggregationTree(10, sigma=2.0, rng=np.random.default_rng(5))
+    t.add(3, 4.0)
+    r = BinaryAggregationTree.from_array(np.frombuffer(t.tree.tobytes()), 2.0)
+    assert r.num_leaves == 16 and r.height == t.height
+    assert r.tree.tobytes() == t.tree.tobytes() and r.tree is not t.tree
+    assert [r.prefix_sum(i) for i in range(16)] == [t.prefix_sum(i) for i in range(16)]
+    assert r.variance(9) == t.variance(9)
+    with pytest.raises(ValueError):
+        BinaryAggregationTree.from_array(np.zeros(4), 2.0)
+
+
 def test_honaker_estimate_unbiased_at_scale():
     # with pure noise (no data) the prefix-sum estimator has mean 0 and
     # variance matching the precomputed cache (statistical check)

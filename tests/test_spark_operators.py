@@ -115,6 +115,25 @@ def test_noisy_dp_unseeded_runs_differ(contrib):
     assert a != b
 
 
+def test_noisy_dp_unseeded_release_is_pinned(contrib):
+    """seed=None pins one secret per release when the plan is built:
+    collecting the release twice, and a second query over it whose own
+    plan re-runs the DP stage, return identical rows, and the noise is
+    real (some row is off its exact count)."""
+    bounded = bounded_clamped(contrib, 32, 1.0).cache()
+    params = DPParams(
+        sigma_key=1.0, sigma_hist=5.0, threshold_quantile=2.0,
+        max_time_steps=30, mu=0, max_contributions_per_user=32,
+    )
+    release = dp_histogram_batch(bounded, params, num_buckets=8)
+    a = sorted(release.collect())
+    assert len(a) > 0
+    assert sorted(release.collect()) == a
+    assert sorted(release.select("*").collect()) == a
+    exact = {r["key"]: r["count"] for r in histogram_release(bounded).collect()}
+    assert any(exact.get(r["key"]) != r["count"] for r in a)
+
+
 def test_noisy_dp_deterministic_under_seed(contrib):
     bounded = bounded_clamped(contrib, 32, 1.0).cache()
     params = DPParams.from_budget(6.0, 1e-9, c=32, t=30, mu=0, seed=7)

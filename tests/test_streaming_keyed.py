@@ -21,8 +21,6 @@ from pyspark.sql import functions as F
 from confidential_storm_spark.operators.dp_batch import DPParams
 from confidential_storm_spark.streaming._drain import run_available_now
 from confidential_storm_spark.streaming.keyed import (
-    _pack_state,
-    _unpack_state,
     dp_histogram_stream_keyed,
     run_keyed_dp_available_now,
 )
@@ -212,42 +210,6 @@ def test_keyed_hot_key_state_is_bounded(spark, tmp_path):
     dp_prog = [pr for pr in res["progress"]["dp"] if pr["numRowsUpdated"] > 0]
     assert all(pr["numRowsUpdated"] == 1 for pr in dp_prog)
     assert dp_prog[-1]["numRowsTotal"] == 1
-
-
-def test_packed_state_size_independent_of_users():
-    """Direct proof there are no user ids in stage-3 state: feed the
-    single-key mechanism 10 vs 100,000 users; the packed state row is
-    byte-for-byte the SAME SIZE (trees depend on T only)."""
-    p = DPParams.zero_noise(t=64, mu=0)
-
-    def packed_size(n_users: int) -> int:
-        m = _mech(p)
-        m.add_window_prev_counts("k", float(n_users), [(-1, n_users)])
-        m.snapshot()
-        row = _pack_state(m, "k")
-        return sum(len(x) for x in row[:2]) + 8 * (len(row) - 2)
-
-    def _mech(p):
-        from confidential_storm_spark.dp.mechanism import StreamingDPMechanism
-
-        return StreamingDPMechanism(
-            p.sigma_key, p.sigma_hist, p.threshold_quantile,
-            p.max_time_steps, p.mu, p.max_contributions_per_user,
-            rng=np.random.default_rng(0),
-        )
-
-    assert packed_size(10) == packed_size(100_000)
-    # and the round-trip is exact: unpack -> repack is identical
-    m = _mech(p)
-    m.add_window_prev_counts("k", 7.0, [(-1, 7)])
-    m.snapshot()
-    row = _pack_state(m, "k")
-    m2 = _unpack_state(row, p, "k", np.random.default_rng(0))
-    assert _pack_state(m2, "k") == row
-    # and both mechanisms evolve identically afterwards
-    m.add_window_prev_counts("k", 3.0, [(-1, 2), (0, 1)])
-    m2.add_window_prev_counts("k", 3.0, [(-1, 2), (0, 1)])
-    assert m.snapshot() == m2.snapshot()
 
 
 def test_keyed_silent_epoch_catch_up(spark, tmp_path):

@@ -37,6 +37,7 @@ def main() -> int:
     out_csv = sys.argv[2] if len(sys.argv) > 2 else f"{REPO}/benchmark/heavy_hitters_sweep.csv"
 
     from confidential_storm_spark.session import get_spark
+    from confidential_storm_spark.streaming._drain import run_available_now
     from confidential_storm_spark.streaming.heavy_hitters import heavy_hitters_stream
 
     spark = get_spark()
@@ -69,15 +70,12 @@ def main() -> int:
             .parquet(f"{src_root}/src")
         )
         t0 = time.time()
-        q = (
+        run_available_now(
             heavy_hitters_stream(stream, "word", capacity=cap, num_shards=N_SHARDS)
             .writeStream.outputMode("update")
-            .foreachBatch(lambda df, bid, acc=out: acc.append((bid, df.collect())))
-            .option("checkpointLocation", f"{src_root}/ck_{cap}")
-            .trigger(availableNow=True)
-            .start()
+            .foreachBatch(lambda df, bid, acc=out: acc.append((bid, df.collect()))),
+            f"{src_root}/ck_{cap}",
         )
-        q.awaitTermination()
         wall = time.time() - t0
         latest: dict[int, dict[str, int]] = {}
         errs: dict[int, int] = {}

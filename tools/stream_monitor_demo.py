@@ -42,6 +42,7 @@ def main() -> int:
         hll_distinct_stream,
         vocab_kl_stream,
     )
+    from confidential_storm_spark.streaming._drain import run_available_now
     from confidential_storm_spark.streaming.heavy_hitters import heavy_hitters_stream
 
     spark = get_spark()
@@ -101,14 +102,12 @@ def main() -> int:
         out: list = []
         mode = "update" if name == "heavy_hitter_sources" else "append"
         t0 = time.time()
-        q = (
+        run_available_now(
             make()
             .writeStream.outputMode(mode)
-            .foreachBatch(lambda df, bid, acc=out: acc.append(df.collect()))
-            .trigger(availableNow=True)
-            .start()
+            .foreachBatch(lambda df, bid, acc=out: acc.append(df.collect())),
+            f"{src}/ck_{name}",
         )
-        q.awaitTermination()
         wall = time.time() - t0
         emitted = [r for batch in out for r in batch]
         rows.append(
