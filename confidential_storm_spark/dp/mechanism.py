@@ -395,8 +395,9 @@ class DPParams:
     def mechanism(self, *stream_id: int) -> StreamingDPMechanism:
         """A fresh mechanism whose noise stream is
         ``default_rng((seed, *stream_id))``: one stream per bucket
-        ``(bucket_id,)`` or per key and batch ``(crc32(key),
-        first_epoch)``.  Needs a seed (see :meth:`for_release`)."""
+        ``(bucket_id,)`` or per key and batch ``(blake2b-128(key),
+        first_epoch)``.  Ids must be non-negative.  Needs a seed (see
+        :meth:`for_release`)."""
         if self.seed is None:
             raise ValueError("DPParams.mechanism needs a seed; call for_release() first")
         return StreamingDPMechanism(

@@ -78,7 +78,7 @@ has no protobuf dependency.
 
 from __future__ import annotations
 
-import zlib
+import hashlib
 from typing import Iterator
 
 import pandas as pd
@@ -185,6 +185,9 @@ def stamp_event_time_epoch_stream(
     past ``window_end + delay`` — advances it.  A continuous
     production stream does this for free.
 
+    Windows that start a whole ``window`` or more before ``origin``
+    (negative epochs) are dropped.
+
     Writes one parquet file per emitted micro-batch
     (``EVENT_STAMPED_SCHEMA``); drains all available input and returns
     the terminated query."""
@@ -209,6 +212,9 @@ def stamp_event_time_epoch_stream(
             .cast("int")
             .alias("epoch"),
         )
+        # windows before origin: the batch path's epoch range [0, T)
+        # ignores them too, and stage 3 seeds noise with the epoch
+        .where(F.col("epoch") >= 0)
     )
 
     def write(df: DataFrame, batch_id: int) -> None:
@@ -314,8 +320,11 @@ def dp_histogram_stream_keyed(
             return
         pdf = pd.concat(chunks, ignore_index=True)
         # the noise stream is derived from (seed, key, first epoch of
-        # the batch), so a replay of the same batch draws the same noise
-        mech = p.mechanism(zlib.crc32(k.encode()), int(pdf["epoch"].min()))
+        # the batch), so a replay of the same batch draws the same noise;
+        # the key enters as a 128-bit digest, so two keys never share
+        # one stream (a 32-bit hash collides within ~100k keys)
+        key_id = int.from_bytes(hashlib.blake2b(k.encode(), digest_size=16).digest(), "big")
+        mech = p.mechanism(key_id, int(pdf["epoch"].min()))
         if state.exists:
             mech.load_key_state(k, state.get)
         out: list[tuple] = []

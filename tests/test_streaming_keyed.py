@@ -124,6 +124,32 @@ def test_keyed_noisy_release_is_partition_invariant(spark, tmp_path):
     assert one and any(c != exact[e][k] for k, c, e in one)
 
 
+def test_keyed_unseeded_colliding_keys_draw_distinct_noise(spark, tmp_path):
+    """seed=None, sigma > 0: two keys with the same crc32 ("plumless",
+    "buckeroo"), new in the same batch, with the same true counts,
+    release different noisy counts — each key's noise stream comes
+    from a collision-resistant digest of the whole key."""
+    import zlib
+
+    a, b = "plumless", "buckeroo"
+    assert zlib.crc32(a.encode()) == zlib.crc32(b.encode())
+    src = str(tmp_path / "src")
+    for e in range(3):
+        rows = [(f"u{e}_{u}", k, 1.0, 100 * e + u) for u in range(50) for k in (a, b)]
+        _write_batch(spark, src, rows, first=e == 0)
+    res = run_keyed_dp_available_now(
+        spark, _reader(spark, src), DPParams(1.0, 1000.0, 0.5, 10, 0, 32),
+        str(tmp_path / "wd"), SCHEMA,
+    )
+    released = {a: [], b: []}
+    for _, rows in res["batches"]:
+        for r in rows:
+            released[r["key"]].append((r["epoch"], r["count"]))
+    assert released[a] and [e for e, _ in released[a]] == [e for e, _ in released[b]]
+    # same true counts: identical noise would release identical series
+    assert sorted(released[a]) != sorted(released[b])
+
+
 def test_keyed_recovery_from_checkpoint(spark, tmp_path):
     """Stop after two epochs, deliver more data, re-run from the SAME
     workdir: per-key state (trees, round scalars) resumes and the final
@@ -376,6 +402,39 @@ def test_keyed_event_time_epochs_match_batch(spark, tmp_path):
         for r in dp_histogram_batch(batch_in, DPParams.zero_noise(t=10, mu=0)).collect()
     }
     assert _final_counts(res["batches"]) == batch == {"a": 5, "b": 2}
+
+
+def test_keyed_event_time_drops_pre_origin_windows(spark, tmp_path):
+    """epoch_mode='event_time': a row dated before ``origin`` has a
+    negative epoch; stamping drops it (the batch path's epoch range
+    [0, T) ignores it too), so stage 3 never sees it and the rest of
+    the release is unchanged."""
+    import datetime as dt
+
+    from confidential_storm_spark.operators.dp_batch import dp_histogram_batch
+
+    ev_schema = "user_id string, key string, value double, event_time timestamp"
+    rows = [
+        ("u0", "pre", 1.0, dt.datetime(2023, 12, 30, 12)),
+        ("u1", "a", 1.0, dt.datetime(2024, 1, 1, 12)),
+        ("u2", "a", 1.0, dt.datetime(2024, 1, 2, 12)),
+    ]
+    src = str(tmp_path / "src")
+    spark.createDataFrame(rows, ev_schema).coalesce(1).write.parquet(src)
+    # heartbeat tick far ahead: every real window closes in the drain
+    spark.createDataFrame(
+        [("hb", "hb", 0.0, dt.datetime(2024, 1, 10))], ev_schema
+    ).coalesce(1).write.mode("append").parquet(src)
+    reader = spark.readStream.schema(ev_schema).option("maxFilesPerTrigger", 1).parquet(src)
+    p = DPParams.zero_noise(t=10, mu=0)
+    res = run_keyed_dp_available_now(
+        spark, reader, p, str(tmp_path / "wd"), ev_schema, epoch_mode="event_time"
+    )
+    batch_in = spark.createDataFrame(rows, ev_schema).withColumn(
+        "epoch", F.datediff(F.col("event_time").cast("date"), F.lit("2024-01-01").cast("date"))
+    )
+    batch = {r["key"]: r["count"] for r in dp_histogram_batch(batch_in, p).collect()}
+    assert _final_counts(res["batches"]) == batch == {"a": 2}
 
 
 def test_keyed_pipeline_on_rocksdb_state_store(spark, tmp_path):
