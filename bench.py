@@ -194,8 +194,10 @@ def main() -> None:
     # main run's per-query medians — PERF_r11 got n_common=0.  Detail
     # now lands in bench_detail_sf{sf}_c{cpus}.json (one file per
     # config, nothing clobbers anything); the legacy un-suffixed path
-    # is still written for any reader of the old name.
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
+    # is still written for any reader of the old name.  Without
+    # $SPARK_GRAFT_CPUS the session's resolved task slots name the
+    # config (a literal "*" made a glob character of the file name).
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(spark.sparkContext.defaultParallelism)
     base_dir = os.path.join(os.path.dirname(os.path.abspath(__file__)), "benchmark")
     detail_path = os.path.join(base_dir, f"bench_detail_sf{sf}_c{cpus}.json")
     try:

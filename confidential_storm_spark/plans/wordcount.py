@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 
 from ..functions.text import words
 from ..operators.dp_batch import DPParams
-from ..streaming._drain import run_available_now
+from ..streaming._drain import read_handoff, run_available_now, write_handoff
 from ..streaming.stateful import bound_contributions_stream, dp_histogram_stream
 
 __all__ = ["WORDCOUNT_PARAMS", "run_wordcount_two_stage"]
@@ -45,9 +45,12 @@ def run_wordcount_two_stage(
     parquet: Spark does not allow two ``applyInPandasWithState``
     operators (per-user bounding, then per-key DP) inside one query,
     exactly as the reference runs them in separate bolts connected by
-    the message fabric.  Stage 1 appends bounded word rows (one file
-    per micro-batch); stage 2 tails them with ``maxFilesPerTrigger=1``
-    so the epoch alignment is preserved.
+    the message fabric.  Stage 1 hands its bounded word rows to stage 2
+    through ``_drain.write_handoff`` / ``read_handoff``, so stage-1
+    batch N is DP epoch N and a stage-1 batch re-run after a crash is
+    counted once.  Not the parquet file sink: behind the bounding state
+    it could only follow ``coalesce(1)``, which runs that state in one
+    task (see ``streaming/keyed.py``).
 
     Returns the list of (batch_id, rows) the sink observed (when
     ``sink`` is None an in-memory collector is used).
@@ -66,22 +69,14 @@ def run_wordcount_two_stage(
         F.explode(words(F.col(text_col))).alias("key"),
     ).withColumn("value", F.lit(1.0))
     bounded = bound_contributions_stream(word_rows, max_contributions, user_col="user_id")
-    # one file per micro-batch so stage 2's maxFilesPerTrigger=1 maps
-    # one stage-1 batch to exactly one DP epoch (without this, each
-    # state partition writes its own file and epochs fragment)
-    bounded = bounded.coalesce(1)
     run_available_now(
-        bounded.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", stage_dir),
+        bounded.writeStream.outputMode("append").foreachBatch(
+            lambda df, batch_id: write_handoff(df, stage_dir, batch_id)
+        ),
         f"{checkpoint_dir}/stage1",
     )
 
-    staged = (
-        spark.readStream.schema("user_id string, key string, value double")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage_dir)
-    )
+    staged = read_handoff(spark, stage_dir, "user_id string, key string, value double")
     collected: list = []
     if sink is None:
         sink = lambda df, bid: collected.append((bid, df.collect()))

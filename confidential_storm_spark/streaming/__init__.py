@@ -11,7 +11,6 @@ from .joins import enrich_stream, interval_join_streams
 from .keyed import (
     dp_histogram_stream_keyed,
     prev_epoch_counts_stream,
-    read_epoch_stream,
     run_keyed_dp_available_now,
     stamp_epoch_stream,
 )
@@ -50,7 +49,6 @@ __all__ = [
     "dp_histogram_stream",
     "dp_histogram_stream_keyed",
     "prev_epoch_counts_stream",
-    "read_epoch_stream",
     "run_keyed_dp_available_now",
     "replay_filter_stream",
     "session_stats_stream",

@@ -25,10 +25,23 @@ existing checkpoint resumes with its own count.  A cluster with at
 least as many slots as the session setting is unchanged.  The cap is
 a set-and-restore of the session conf, so stages that share a session
 are started from one thread.
+
+Chained stages hand off through parquet with :func:`write_handoff`
+(the upstream ``foreachBatch`` body) and :func:`read_handoff`.  Each
+micro-batch lands as one file in ``<path>/<batch_id:010d>`` and the
+reader takes one file per trigger, so upstream batch N is downstream
+batch N.  A batch re-run after a crash (written, not committed) finds
+its directory's ``_SUCCESS`` and writes nothing, so no epoch reaches
+the next stage twice; an attempt that died before ``_SUCCESS`` is
+overwritten.  The re-run still executes, into the ``noop`` sink,
+because a stateful upstream must commit its state for every batch.
+``repartition(1)`` makes the one file without running the upstream
+stage in one task, as ``coalesce(1)`` would.
 """
 
 from __future__ import annotations
 
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 _SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
@@ -63,3 +76,28 @@ def run_available_now(
             f"(checkpoint {checkpoint})"
         )
     return q
+
+
+def write_handoff(df: DataFrame, path: str, batch_id: int) -> None:
+    """``foreachBatch`` body of a handoff: write micro-batch
+    ``batch_id`` as one parquet file in ``path/<batch_id:010d>``, or,
+    when that directory is already complete (a re-run batch), run the
+    batch into the ``noop`` sink and write nothing."""
+    out = f"{path}/{batch_id:010d}"
+    spark = df.sparkSession
+    done = spark._jvm.org.apache.hadoop.fs.Path(f"{out}/_SUCCESS")
+    if done.getFileSystem(spark._jsc.hadoopConfiguration()).exists(done):
+        df.write.format("noop").mode("overwrite").save()
+    else:
+        df.repartition(1).write.mode("overwrite").parquet(out)
+
+
+def read_handoff(spark: SparkSession, path: str, schema: str) -> DataFrame:
+    """File-source stream over a handoff written by
+    :func:`write_handoff`, one file (one upstream batch) per
+    trigger."""
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(f"{path}/*")
+    )

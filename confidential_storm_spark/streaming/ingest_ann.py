@@ -17,8 +17,8 @@ when the appended fraction dominates, exactly like re-clustering any
 secondary index — and the full-probe path stays exact through any
 amount of drift, so correctness never depends on the re-train cadence.
 
-foreachBatch is at-least-once by itself; ``idempotent=True`` (the
-default) adds the standard epoch-id ledger: each committed batch
+foreachBatch is at-least-once by itself, so the ingest keeps the
+standard epoch-id ledger: each committed batch
 records ``(query_id, epoch_id)`` in a tiny ``_epochs`` sidecar next to
 the index, and a replayed epoch is skipped before any write.  The
 ledger is keyed by the streaming QUERY id (stable across restarts from
@@ -86,15 +86,14 @@ def ann_ingest_stream(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     compressed: bool = False,
-    idempotent: bool = True,
 ) -> StreamingQuery:
     """Append every micro-batch of ``embeddings`` (a streaming
     DataFrame) to the standing index at ``index_path`` (built
     beforehand with ``ivf_write_index`` / ``ivfpq_write_index``).
     ``compressed=True`` routes through :func:`pq.ivfpq_append` (codes
     from the existing codebooks); otherwise :func:`ivf_append`.
-    ``idempotent=True`` skips epochs already recorded (keyed by this
-    checkpoint's query id) in the ``{index_path}/_epochs`` ledger, so
+    Epochs already recorded (keyed by this checkpoint's query id) in
+    the ``{index_path}/_epochs`` ledger are skipped, so
     checkpoint-replayed batches don't double-append and a FRESH
     checkpoint's epochs never collide with a previous run's ids.
     Drains all available input and returns the terminated
@@ -107,20 +106,18 @@ def ann_ingest_stream(
 
     def _process(batch: DataFrame, epoch_id: int) -> None:
         spark = batch.sparkSession
-        if idempotent:
-            if not qid_cache:
-                qid_cache.append(_checkpoint_query_id(checkpoint_dir))
-            qid = qid_cache[0]
-            if _epoch_committed(spark, ledger, qid, epoch_id):
-                return
+        if not qid_cache:
+            qid_cache.append(_checkpoint_query_id(checkpoint_dir))
+        qid = qid_cache[0]
+        if _epoch_committed(spark, ledger, qid, epoch_id):
+            return
         if compressed:
             ivfpq_append(batch, index_path, vec_col=vec_col, id_col=id_col)
         else:
             ivf_append(batch, index_path, vec_col=vec_col, id_col=id_col)
-        if idempotent:
-            spark.createDataFrame(
-                [(qid, int(epoch_id))], "query_id string, epoch_id long"
-            ).coalesce(1).write.mode("append").parquet(ledger)
+        spark.createDataFrame(
+            [(qid, int(epoch_id))], "query_id string, epoch_id long"
+        ).coalesce(1).write.mode("append").parquet(ledger)
 
     return run_available_now(
         embeddings.writeStream.foreachBatch(_process), checkpoint_dir

@@ -16,8 +16,7 @@ the same micro-batch==epoch file handoff the reference's ZK epoch
 barrier provides):
 
 1. :func:`stamp_epoch_stream` — ``foreachBatch`` stamps
-   ``epoch = batch_id`` and writes ONE parquet file per batch
-   (processing-time mode, reference T3 parity); OR
+   ``epoch = batch_id`` (processing-time mode, reference T3 parity); OR
    :func:`stamp_event_time_epoch_stream` — epochs derived from the
    DATA via tumbling event-time windows with a watermark late-drop,
    matching the batch path's day-since-origin epochs (the §7
@@ -34,6 +33,23 @@ barrier provides):
    ids anywhere in state; state size per key is O(T) regardless of how
    many users touch the key (one key with 10^6 users costs the same as
    10 — test-proven).  State writes are O(keys touched this batch).
+
+Handoff: stages 1 and 2 write through ``_drain.write_handoff`` and
+stages 2 and 3 read through ``_drain.read_handoff``.  A stage-1 or
+stage-2 batch that Spark re-runs (its commit-log entry missing) writes
+nothing, so each epoch is counted once, as the C-bounded contributions
+and the noise scales assume; an append would hand that epoch downstream
+twice.  Why not the parquet file sink (checked on Spark 4.1.2): two
+``applyInPandasWithState`` in one query are rejected even in append
+mode, so the stages cannot be fused, and ``repartition(1)``,
+``repartition(1, key)`` or a projection placed directly on
+``applyInPandasWithState`` output inside the stream fails with
+``ClassCastException: ColumnarBatchRow cannot be cast to UnsafeRow``,
+so behind stage 2 the file sink could only follow ``coalesce(1)``,
+which runs the whole stateful stage in one task.  A re-run batch still
+runs, into the ``noop`` sink: a ``foreachBatch`` that returns without
+running a stateful batch fails with
+``STATE_STORE_COMMIT_VALIDATION_FAILED``.
 
 Epoch semantics: a key's group function only runs when the key has
 rows, so stage 3 CATCHES UP silent epochs deterministically (zero-data
@@ -88,12 +104,11 @@ from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..dp.mechanism import DPParams
-from ._drain import run_available_now
+from ._drain import read_handoff, run_available_now, write_handoff
 
 __all__ = [
     "stamp_epoch_stream",
     "stamp_event_time_epoch_stream",
-    "read_epoch_stream",
     "prev_epoch_counts_stream",
     "dp_histogram_stream_keyed",
     "run_keyed_dp_available_now",
@@ -108,26 +123,18 @@ PREV_COUNTS_SCHEMA = "key string, epoch int, total double, prev_epoch int"
 
 
 def stamp_epoch_stream(events: DataFrame, path: str, checkpoint: str) -> StreamingQuery:
-    """Stamp each micro-batch with ``epoch = batch_id`` and write ONE
-    parquet file per batch (``coalesce(1)`` keeps batch == epoch for
-    the downstream ``maxFilesPerTrigger=1`` file source).  Drains all
-    available input and returns the terminated StreamingQuery."""
+    """Stamp each micro-batch with ``epoch = batch_id`` and hand it off
+    to ``path`` (``_drain.write_handoff``: one file per batch, a re-run
+    batch writes nothing).  Drains all available input and returns
+    the terminated StreamingQuery."""
 
-    def write(df: DataFrame, batch_id: int) -> None:
-        df.withColumn("epoch", F.lit(batch_id).cast("int")).coalesce(1).write.mode(
-            "append"
-        ).parquet(path)
-
-    return run_available_now(events.writeStream.foreachBatch(write), checkpoint)
-
-
-def read_epoch_stream(spark: SparkSession, path: str, schema: str) -> DataFrame:
-    """File-source reader for a stage-1 output dir: one file per
-    trigger, so one stamped epoch per micro-batch."""
-    return (
-        spark.readStream.schema(f"{schema}, epoch int")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(path)
+    return run_available_now(
+        events.writeStream.foreachBatch(
+            lambda df, batch_id: write_handoff(
+                df.withColumn("epoch", F.lit(batch_id).cast("int")), path, batch_id
+            )
+        ),
+        checkpoint,
     )
 
 
@@ -188,9 +195,9 @@ def stamp_event_time_epoch_stream(
     Windows that start a whole ``window`` or more before ``origin``
     (negative epochs) are dropped.
 
-    Writes one parquet file per emitted micro-batch
-    (``EVENT_STAMPED_SCHEMA``); drains all available input and returns
-    the terminated query."""
+    Hands off one parquet file per micro-batch
+    (``EVENT_STAMPED_SCHEMA``, ``_drain.write_handoff``); drains all
+    available input and returns the terminated query."""
     import datetime as dt
 
     win_us = _window_micros(window)
@@ -217,13 +224,11 @@ def stamp_event_time_epoch_stream(
         .where(F.col("epoch") >= 0)
     )
 
-    def write(df: DataFrame, batch_id: int) -> None:
-        # repartition(1): one file per batch; the narrow coalesce would
-        # single-task the upstream stateful aggregation
-        df.repartition(1).write.mode("append").parquet(path)
-
     return run_available_now(
-        stamped.writeStream.foreachBatch(write).outputMode("append"), checkpoint
+        stamped.writeStream.foreachBatch(
+            lambda df, batch_id: write_handoff(df, path, batch_id)
+        ).outputMode("append"),
+        checkpoint,
     )
 
 
@@ -385,7 +390,9 @@ def run_keyed_dp_available_now(
     (one ``availableNow`` pass per stage, in order — in production the
     three checkpointed queries run concurrently).  All checkpoints and
     handoffs live under ``workdir``, so calling this again after new
-    input files arrive RESUMES from state (recovery-tested).  A stage
+    input files arrive RESUMES from state (recovery-tested), and a
+    stage-1 or stage-2 batch re-run after a crash is handed off once
+    (see the module docstring).  A stage
     that fails, or is still running after its wait, raises before the
     next stage reads its handoff.
 
@@ -416,43 +423,28 @@ def run_keyed_dp_available_now(
             delay,
             origin,
         )
-        stamped = (
-            spark.readStream.schema(EVENT_STAMPED_SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stamped_path)
-        )
+        stamped = read_handoff(spark, stamped_path, EVENT_STAMPED_SCHEMA)
         prev = prev_epoch_counts_stream(stamped)
     elif epoch_mode == "processing":
         stamp_epoch_stream(events, stamped_path, f"{workdir}/ckpt_stamp")
-        stamped = read_epoch_stream(spark, stamped_path, schema)
+        stamped = read_handoff(spark, stamped_path, f"{schema}, epoch int")
         prev = prev_epoch_counts_stream(stamped, key_col, user_col, value_col)
     else:
         raise ValueError(f"unknown epoch_mode {epoch_mode!r}")
 
-    def write_prev(df: DataFrame, batch_id: int) -> None:
-        # repartition(1), NOT coalesce(1): coalesce's narrow dependency
-        # would collapse the stateful stage into a single task;
-        # the shuffle keeps state processing parallel and only the
-        # small per-pair output funnels through one writer (one file
-        # per batch keeps the downstream batch == epoch mapping)
-        df.repartition(1).write.mode("append").parquet(prev_path)
-
     q2 = run_available_now(
-        prev.writeStream.foreachBatch(write_prev).outputMode("update"),
+        prev.writeStream.foreachBatch(
+            lambda df, batch_id: write_handoff(df, prev_path, batch_id)
+        ).outputMode("update"),
         f"{workdir}/ckpt_prev",
     )
     progress["prev_counts"] = [
         pr["stateOperators"][0] for pr in q2.recentProgress if pr["stateOperators"]
     ]
 
-    prev_stream = (
-        spark.readStream.schema(PREV_COUNTS_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(prev_path)
-    )
     out: list = []
     q3 = run_available_now(
-        dp_histogram_stream_keyed(prev_stream, params)
+        dp_histogram_stream_keyed(read_handoff(spark, prev_path, PREV_COUNTS_SCHEMA), params)
         .writeStream.outputMode("update")
         .foreachBatch(lambda df, bid: out.append((bid, df.collect()))),
         f"{workdir}/ckpt_dp",

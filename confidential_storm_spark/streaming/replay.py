@@ -35,7 +35,7 @@ import uuid
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
-from ._drain import run_available_now
+from ._drain import read_handoff, run_available_now
 
 __all__ = ["write_epoch_source", "replay_available_now"]
 
@@ -45,9 +45,8 @@ def write_epoch_source(
 ) -> tuple[str, int]:
     """Materialize ``df`` as one parquet FILE per distinct value of
     ``epoch_col`` (ascending), named ``epoch=NNNN.parquet`` with
-    strictly increasing mtimes, so a file-source stream over
-    ``out_dir`` with ``maxFilesPerTrigger=1`` replays the epochs in
-    order.  Returns the DDL schema string for ``readStream.schema``
+    strictly increasing mtimes, so ``_drain.read_handoff`` over
+    ``out_dir`` (one file per trigger) replays the epochs in order.  Returns the DDL schema string for ``readStream.schema``
     and the total row count (the replay sizes its state partitioning
     from it)."""
     import pyarrow as pa
@@ -161,10 +160,7 @@ def replay_available_now(
         # removes one full batch of planning + state commits per
         # replay; all 15 replay hashes verified identical at sf0.1.
         spark.conf.set(_NODATA_KEY, "false")
-        stream = (
-            spark.readStream.schema(ddl).option("maxFilesPerTrigger", 1).parquet(src)
-        )
-        out = transform(stream)
+        out = transform(read_handoff(spark, src, ddl))
         if output_schema is None:
             output_schema = ", ".join(
                 f.name + " " + f.dataType.simpleString() for f in out.schema.fields

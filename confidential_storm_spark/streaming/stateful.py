@@ -8,9 +8,8 @@ The operators mirror the reference's per-enclave mutable state
   exactly the state the reference holds per DP-bolt replica,
   StreamingDPMechanism.java:34-96).  One micro-batch == one epoch
   (the reference's ZK epoch barrier is Spark's micro-batch barrier,
-  SURVEY §2.9 T2).
-- :func:`heartbeat_stream` — T4 dummy traffic as a source, unioned
-  into :func:`dp_histogram_stream` for exact tick parity.
+  SURVEY §2.9 T2).  Its ``heartbeats=`` leg takes T4 dummy traffic
+  (null-key rows per bucket) for exact tick parity.
 - :func:`bound_contributions_stream` — per-user running contribution
   counts (UserContributionLimiter.java:12).
 - :func:`replay_filter_stream` — per-producer (max_seen, 128-bit mask)
@@ -42,35 +41,12 @@ from ..functions.replay import DEFAULT_WINDOW_SIZE, replay_accept
 
 __all__ = [
     "dp_histogram_stream",
-    "heartbeat_stream",
     "bound_contributions_stream",
     "replay_filter_stream",
     "dedup_stream",
     "bloom_dedup_stream",
     "reservoir_kmin_stream",
 ]
-
-
-def heartbeat_stream(
-    spark, num_buckets: int, schema, rows_per_second: int = 1
-) -> DataFrame:
-    """T4 dummy traffic as a SOURCE, like the reference's spouts: a
-    rate stream exploded to one null-key row per bucket per tick, cast
-    to the event schema (plus the ``bucket`` routing column).  Unioned
-    into :func:`dp_histogram_stream` via its ``heartbeats`` argument it
-    guarantees every bucket's epoch advances every micro-batch even
-    when that bucket saw no data (exact tick parity with the
-    reference's dummy-traffic topologies)."""
-    rate = spark.readStream.format("rate").option("rowsPerSecond", rows_per_second).load()
-    # generators can't nest inside other expressions (e.g. a cast) in a
-    # select — explode first, cast in a second projection
-    exploded = rate.select(
-        F.explode(F.sequence(F.lit(0), F.lit(num_buckets - 1))).alias("_b")
-    )
-    cols = [F.col("_b").cast("int").alias("bucket")] + [
-        F.lit(None).cast(f.dataType).alias(f.name) for f in schema.fields
-    ]
-    return exploded.select(*cols)
 
 
 def dp_histogram_stream(
@@ -89,8 +65,8 @@ def dp_histogram_stream(
     The epoch counter is per-bucket (a bucket with no rows in a batch
     does not advance).  For exact tick parity with the reference's
     dummy-traffic topologies (T4), pass ``heartbeats`` — rows with a
-    ``bucket`` column and null ``key`` (see :func:`heartbeat_stream`):
-    they force every bucket group to be invoked each micro-batch while
+    ``bucket`` column and null ``key``, one per bucket per tick: they
+    force every bucket group to be invoked each micro-batch while
     contributing nothing to any histogram.
     """
     p = params.for_release()

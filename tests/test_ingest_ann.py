@@ -76,8 +76,8 @@ def test_ann_ingest_replay_is_idempotent(spark, tmp_path):
     """The (query_id, epoch_id) ledger makes a checkpoint-replayed
     batch a no-op: after a simulated crash (the last batch's commit
     marker deleted), restarting from the SAME checkpoint replays that
-    batch, and the ledger must skip the re-append.  With
-    idempotent=False the same replay double-appends.  A FRESH
+    batch (it runs again), and the ledger must skip the
+    re-append.  A FRESH
     checkpoint over the same source is a NEW logical stream (new query
     id) and must re-ingest — bare epoch-id keying would silently skip
     its data (the round-8 advice bug)."""
@@ -92,13 +92,13 @@ def test_ann_ingest_replay_is_idempotent(spark, tmp_path):
     feed.repartition(2).write.parquet(src)
     n_feed = feed.count()
 
-    def run(path, ck, flag):
+    def run(path, ck):
         stream = (
             spark.readStream.schema(df.schema)
             .option("maxFilesPerTrigger", 1)
             .parquet(src)
         )
-        ann_ingest_stream(stream, path, ck, idempotent=flag)
+        ann_ingest_stream(stream, path, ck)
 
     def feed_rows(path):
         return (
@@ -107,35 +107,37 @@ def test_ann_ingest_replay_is_idempotent(spark, tmp_path):
             .count()
         )
 
-    for flag, expect_after_replay in ((True, n_feed), (False, n_feed + n_feed // 2)):
-        path = str(tmp_path / f"ivf_{flag}")
-        ck = str(tmp_path / f"ck_{flag}")
-        ivf_write_index(base, path, n_clusters=4)
-        run(path, ck, flag)
-        assert feed_rows(path) == n_feed
-        # simulate a crash after the last batch's work but before its
-        # checkpoint commit: clone the checkpoint (same metadata, same
-        # query id) minus the last commit marker — restarting from it
-        # replays that batch.  (A clone, not an in-place delete: Spark
-        # detects external edits to a checkpoint it has already used in
-        # this JVM and aborts with a concurrent-usage error.)
-        import shutil
+    path = str(tmp_path / "ivf")
+    ck = str(tmp_path / "ck")
+    ivf_write_index(base, path, n_clusters=4)
+    run(path, ck)
+    assert feed_rows(path) == n_feed
+    # simulate a crash after the last batch's work but before its
+    # checkpoint commit: clone the checkpoint (same metadata, same
+    # query id) minus the last commit marker — restarting from it
+    # replays that batch.  (A clone, not an in-place delete: Spark
+    # detects external edits to a checkpoint it has already used in
+    # this JVM and aborts with a concurrent-usage error.)
+    import shutil
 
-        ck_replay = f"{ck}_replay"
-        shutil.copytree(ck, ck_replay)
-        commits = sorted(
-            f for f in os.listdir(f"{ck_replay}/commits") if not f.startswith(".")
-        )
-        os.remove(f"{ck_replay}/commits/{commits[-1]}")
-        crc = f"{ck_replay}/commits/.{commits[-1]}.crc"
-        if os.path.exists(crc):  # hadoop local-FS checksum sidecar
-            os.remove(crc)
-        run(path, ck_replay, flag)
-        assert feed_rows(path) == expect_after_replay, flag
+    ck_replay = f"{ck}_replay"
+    shutil.copytree(ck, ck_replay)
+    commits = sorted(
+        f for f in os.listdir(f"{ck_replay}/commits") if not f.startswith(".")
+    )
+    os.remove(f"{ck_replay}/commits/{commits[-1]}")
+    crc = f"{ck_replay}/commits/.{commits[-1]}.crc"
+    if os.path.exists(crc):  # hadoop local-FS checksum sidecar
+        os.remove(crc)
+    run(path, ck_replay)
+    # the last batch ran again (its commit is back) and the ledger
+    # kept it out of the index
+    assert os.path.exists(f"{ck_replay}/commits/{commits[-1]}")
+    assert feed_rows(path) == n_feed
 
     # fresh checkpoint = new logical stream: MUST ingest (not skip)
     path = str(tmp_path / "ivf_fresh")
     ivf_write_index(base, path, n_clusters=4)
-    run(path, str(tmp_path / "ck_a"), True)
-    run(path, str(tmp_path / "ck_b"), True)  # new query id, same source
+    run(path, str(tmp_path / "ck_a"))
+    run(path, str(tmp_path / "ck_b"))  # new query id, same source
     assert feed_rows(path) == 2 * n_feed

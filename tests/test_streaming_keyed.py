@@ -183,6 +183,49 @@ def test_keyed_recovery_from_checkpoint(spark, tmp_path):
     assert _final_counts(ref["batches"]) == {"hot": 6, "cold": 2, "late": 1}
 
 
+@pytest.mark.parametrize("ckpt", ["ckpt_stamp", "ckpt_prev"])
+def test_reexecuted_handoff_batch_counts_once(spark, tmp_path, ckpt):
+    """A stage-1 or stage-2 batch that re-runs after a crash (its
+    handoff written, its commit-log entry not) is handed downstream
+    once: the releases equal an uninterrupted drain's.  Appending the
+    re-run batch again would count that epoch twice."""
+    import os
+
+    batches = [
+        [(f"u{e}_{u}", f"k{k}", 1.0, 100 * e + 10 * k + u) for k in range(3) for u in range(10)]
+        for e in range(3)
+    ]
+    p = DPParams.zero_noise(t=10, mu=0)
+
+    def released(results):
+        return sorted(
+            (r["key"], r["count"], r["epoch"])
+            for res in results
+            for _, rows in res["batches"]
+            for r in rows
+        )
+
+    src, wd = str(tmp_path / "src"), str(tmp_path / "wd")
+    _write_batch(spark, src, batches[0], first=True)
+    _write_batch(spark, src, batches[1])
+    res1 = run_keyed_dp_available_now(spark, _reader(spark, src), p, wd, SCHEMA)
+    # crash after batch 1's handoff write, before its commit
+    for name in ("1", ".1.crc"):
+        if os.path.exists(f"{wd}/{ckpt}/commits/{name}"):
+            os.remove(f"{wd}/{ckpt}/commits/{name}")
+    _write_batch(spark, src, batches[2])
+    res2 = run_keyed_dp_available_now(spark, _reader(spark, src), p, wd, SCHEMA)
+
+    src2, wd2 = str(tmp_path / "src2"), str(tmp_path / "wd2")
+    for i, rows in enumerate(batches):
+        _write_batch(spark, src2, rows, first=i == 0)
+    ref = run_keyed_dp_available_now(spark, _reader(spark, src2), p, wd2, SCHEMA)
+    assert [r for r in released([ref]) if r[2] == 2] == [
+        ("k0", 30, 2), ("k1", 30, 2), ("k2", 30, 2)
+    ]
+    assert released([res1, res2]) == released([ref])
+
+
 def test_keyed_state_writes_scale_with_touched_keys(spark, tmp_path):
     """THE per-key property: batch 0 touches 30 keys, batch 1 touches 2
     -> the DP stage's state store updates 30 then 2 rows (it HOLDS 30

@@ -69,6 +69,24 @@ def _rate_events(spark, rows_per_second: int, num_keys: int = NUM_KEYS,
     )
 
 
+def _rate_heartbeats(spark, num_buckets: int, schema, rows_per_second: int = 1):
+    """T4 dummy traffic from a rate source: one null-key row per bucket
+    per tick, cast to the event schema plus the ``bucket`` column that
+    ``dp_histogram_stream``'s ``heartbeats`` leg routes on."""
+    from pyspark.sql import functions as F
+
+    rate = spark.readStream.format("rate").option("rowsPerSecond", rows_per_second).load()
+    # generators can't nest inside other expressions (e.g. a cast) in a
+    # select: explode first, cast in a second projection
+    exploded = rate.select(
+        F.explode(F.sequence(F.lit(0), F.lit(num_buckets - 1))).alias("_b")
+    )
+    cols = [F.col("_b").cast("int").alias("bucket")] + [
+        F.lit(None).cast(f.dataType).alias(f.name) for f in schema.fields
+    ]
+    return exploded.select(*cols)
+
+
 def _drain(q, seconds: float) -> tuple[int, int, float]:
     t0 = time.time()
     time.sleep(seconds)
@@ -84,16 +102,13 @@ def bench_bucketed(spark, rows_per_second: int, seconds: float, heartbeats: bool
     from pyspark.sql.types import StructType
 
     from confidential_storm_spark.operators.dp_batch import DPParams
-    from confidential_storm_spark.streaming.stateful import (
-        dp_histogram_stream,
-        heartbeat_stream,
-    )
+    from confidential_storm_spark.streaming.stateful import dp_histogram_stream
 
     events = _rate_events(spark, rows_per_second)
     hb = None
     if heartbeats:
         schema: StructType = events.schema
-        hb = heartbeat_stream(spark, num_buckets=8, schema=schema, rows_per_second=1)
+        hb = _rate_heartbeats(spark, num_buckets=8, schema=schema)
     out = dp_histogram_stream(
         events, DPParams.zero_noise(t=100, mu=0), num_buckets=8, heartbeats=hb
     )
@@ -113,7 +128,9 @@ def bench_keyed(spark, rows_per_second: int, seconds: float):
     from pyspark.sql import functions as F
 
     from confidential_storm_spark.operators.dp_batch import DPParams
+    from confidential_storm_spark.streaming._drain import read_handoff, write_handoff
     from confidential_storm_spark.streaming.keyed import (
+        PREV_COUNTS_SCHEMA,
         dp_histogram_stream_keyed,
         prev_epoch_counts_stream,
     )
@@ -124,24 +141,14 @@ def bench_keyed(spark, rows_per_second: int, seconds: float):
     prev = prev_epoch_counts_stream(rate_epoch)
     workdir = tempfile.mkdtemp(prefix="sbk_")
     q2 = (
-        # repartition(1), NOT coalesce(1): coalesce is a narrow
-        # dependency, so it would collapse the whole stateful stage
-        # into one task; repartition keeps the 32-way state processing
-        # and funnels only the tiny output through one writer
         prev.writeStream.outputMode("update")
-        .foreachBatch(
-            lambda df, bid: df.repartition(1)
-            .write.mode("append")
-            .parquet(f"{workdir}/prev")
-        )
+        .foreachBatch(lambda df, bid: write_handoff(df, f"{workdir}/prev", bid))
         .option("checkpointLocation", f"{workdir}/ckpt2")
         .start()
     )
     # let stage 2 produce some files before stage 3 attaches
     time.sleep(3)
-    from confidential_storm_spark.streaming.keyed import PREV_COUNTS_SCHEMA
-
-    prev_stream = spark.readStream.schema(PREV_COUNTS_SCHEMA).parquet(f"{workdir}/prev")
+    prev_stream = read_handoff(spark, f"{workdir}/prev", PREV_COUNTS_SCHEMA)
     q3 = (
         dp_histogram_stream_keyed(prev_stream, DPParams.zero_noise(t=100, mu=0))
         .writeStream.outputMode("update")
