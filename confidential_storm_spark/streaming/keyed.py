@@ -21,13 +21,18 @@ barrier provides):
    DATA via tumbling event-time windows with a watermark late-drop,
    matching the batch path's day-since-origin epochs (the §7
    semantic upgrade; differential-tested against ``dp_batch``).
-2. :func:`prev_epoch_counts_stream` — state keyed by **(key, user)**,
-   one ``last_epoch`` int per pair: emits each pair's window total
-   plus the user's PREVIOUS contribution epoch for that key and drops
-   the user id.  State writes are O(pairs touched this batch); each
-   state row is O(1) bytes (this is the streaming twin of the batch
+2. :func:`prev_epoch_counts_stream` — state keyed by **user**, the
+   privacy unit: one row per user holding its ``key -> last epoch``
+   map, O(keys of the user), at most C under the contribution bound.
+   Emits each (key, user) pair's window total plus the user's PREVIOUS
+   contribution epoch for that key and drops the user id.  State
+   writes are O(users touched this batch), and one Python group runs
+   per user, not per pair (this is the streaming twin of the batch
    path's window scan,
-   ``StreamingDPMechanism.add_window_prev_counts``).
+   ``StreamingDPMechanism.add_window_prev_counts``).  A checkpoint
+   written when this stage was keyed by (key, user) does not resume:
+   stage 2 stops with ``STATE_STORE_KEY_SCHEMA_NOT_COMPATIBLE`` before
+   it hands anything off.  There is no migration; start a new workdir.
 3. :func:`dp_histogram_stream_keyed` — state keyed by **key**: the two
    aggregation trees as raw float64 bytes plus round scalars.  NO user
    ids anywhere in state; state size per key is O(T) regardless of how
@@ -61,14 +66,18 @@ emitted on the key's next invocation (late) rather than at the
 predicted epoch; the cumulative sums are identical.
 
 Both DP operators stay.  Word count keeps the per-bucket operator
-because it is faster there: one drain of 2,000 sealed documents (30
-distinct words, ~23,700 (word, user) pairs) takes 2.8-2.9 s on it
-against 17.9-19.1 s through this pipeline (3 interleaved warm drains
-each on a 4-core host, one state partition per core).  Word count has
-few keys and many users per key: stage 2 here keeps one state group
-per (key, user) pair, the per-bucket operator one blob per bucket.
-This pipeline stays because its state does not grow with the number
-of users.
+because it is still faster there.  Over the same one-epoch input (2,000
+sealed documents opened, split and bounded to C=100 once: 70,904 word
+rows, 862 users, 30 words, 23,146 (word, user) pairs) a fresh
+``availableNow`` drain releases the exact counts in 0.79-1.15 s through
+``dp_histogram_stream`` (4 buckets, one query) against 2.7-3.5 s warm
+through this pipeline (three queries; 4.2 s cold), on a 4-core host
+with one state partition per core.  Stage 2 is keyed by user for this
+reason: keyed by (key, user) it ran one Python group per pair (23,146
+instead of 862) and the same drain took 17.6-19.5 s.  This pipeline
+stays because its DP state does not grow with the number of users per
+key, and its state writes follow the keys and users a batch touches,
+where the per-bucket operator rewrites a whole bucket's blob.
 
 Stage 3's state row is packed and restored by the mechanism itself
 (``StreamingDPMechanism.key_state`` / ``load_key_state``), so this
@@ -233,7 +242,7 @@ def stamp_event_time_epoch_stream(
 
 
 # ---------------------------------------------------------------------------
-# stage 2: per-(key, user) previous-epoch tracking
+# stage 2: per-user previous-epoch tracking
 # ---------------------------------------------------------------------------
 
 
@@ -248,24 +257,33 @@ def prev_epoch_counts_stream(
     emit ``(key, epoch, total, prev_epoch)`` where ``prev_epoch`` is
     the user's previous contribution epoch for that key (``-1`` for
     first-ever) — then FORGET the user id: downstream state never sees
-    it.  State per (key, user) group is a single int; writes per batch
-    are O(pairs touched)."""
+    it.  Epochs of one batch apply in ascending order, and a late epoch
+    still becomes the key's new last.
+
+    Grouped by user, the privacy unit: one state row per user holds
+    the user's ``key -> last epoch`` map, O(keys of the user) — at most
+    C under the contribution bound the calibration assumes.  Writes per
+    batch are O(users touched).  Each total is pandas' grouped sum of
+    one (key, epoch) cell, in input order."""
 
     def process(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
+        user: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
-        last = int(state.get[0]) if state.exists else -1
         chunks = [pdf for pdf in pdfs if len(pdf)]
         if not chunks:
             return
         pdf = pd.concat(chunks, ignore_index=True)
-        totals = pdf.groupby(epoch_col, sort=True)[value_col].sum()
-        rows = []
-        for epoch, total in totals.items():
-            rows.append((key[0], int(epoch), float(total), last))
-            last = int(epoch)
+        last = state.get[0] if state.exists else {}
+        totals = pdf.groupby(["_k", epoch_col], sort=True)[value_col].sum()
+        keys, epochs = (totals.index.get_level_values(i).tolist() for i in (0, 1))
+        prev = []
+        for k, epoch in zip(keys, epochs):
+            prev.append(last.get(k, -1))
+            last[k] = epoch
         state.update((last,))
-        yield pd.DataFrame(rows, columns=["key", "epoch", "total", "prev_epoch"])
+        yield pd.DataFrame(
+            {"key": keys, "epoch": epochs, "total": totals.to_numpy(), "prev_epoch": prev}
+        )
 
     return (
         stamped.filter(F.col(key_col).isNotNull())
@@ -275,11 +293,11 @@ def prev_epoch_counts_stream(
             F.col(value_col).cast("double").alias(value_col),
             F.col(epoch_col).cast("int").alias(epoch_col),
         )
-        .groupBy("_k", "_u")
+        .groupBy("_u")
         .applyInPandasWithState(
             process,
             outputStructType=PREV_COUNTS_SCHEMA,
-            stateStructType="last_epoch int",
+            stateStructType="last_epoch map<string, int>",
             outputMode="update",
             timeoutConf=GroupStateTimeout.NoTimeout,
         )

@@ -249,6 +249,102 @@ def test_keyed_state_writes_scale_with_touched_keys(spark, tmp_path):
     assert [pr["numRowsUpdated"] for pr in prev_prog] == [30, 2]
 
 
+def test_prev_counts_state_writes_scale_with_touched_users(spark, tmp_path):
+    """Stage 2 keeps one state row per user: one user on 30 keys in
+    batch 0 and on 2 keys in batch 1 updates 1 stage-2 row per batch,
+    while stage 3 updates one row per key touched."""
+    src = str(tmp_path / "src")
+    _write_batch(spark, src, [("u", f"k{i}", 1.0, i) for i in range(30)], first=True)
+    _write_batch(spark, src, [("u", "k0", 1.0, 100), ("u", "k1", 1.0, 101)])
+    res = run_keyed_dp_available_now(
+        spark, _reader(spark, src), DPParams.zero_noise(t=10, mu=0),
+        str(tmp_path / "wd"), SCHEMA,
+    )
+    prev_prog = [
+        pr for pr in res["progress"]["prev_counts"] if pr["numRowsUpdated"] > 0
+    ]
+    assert [pr["numRowsUpdated"] for pr in prev_prog] == [1, 1]
+    assert prev_prog[-1]["numRowsTotal"] == 1
+    dp_prog = [pr for pr in res["progress"]["dp"] if pr["numRowsUpdated"] > 0]
+    assert [pr["numRowsUpdated"] for pr in dp_prog] == [30, 2]
+
+
+def test_prev_epoch_counts_match_pandas_reference(spark, tmp_path):
+    """Differential: stage 2 streamed over 5 batches (6 epochs) emits,
+    per batch, exactly the rows of a pandas reference computed per
+    (key, user) — each epoch's total is pandas' grouped sum of that
+    (key, user, epoch) cell in input order, and ``prev_epoch`` is the
+    user's previous epoch on that key (epochs ascending within a batch;
+    a late epoch still becomes the new last).  Covers a user on several
+    keys, a user absent for a batch, a late epoch, null users on two
+    keys, and a cell whose grouped sum differs from a left-to-right
+    float loop, compared bit for bit."""
+    import time
+
+    import pandas as pd
+
+    from confidential_storm_spark.streaming.keyed import prev_epoch_counts_stream
+
+    stamped_schema = "key string, user_id string, value double, epoch int"
+    mixed = [123456.789, 0.001, 1e-07, 3.3]  # one (k0, u1, 0) cell
+    loop_sum = 0.0
+    for v in mixed:
+        loop_sum += v
+    assert pd.Series(mixed).groupby([0] * len(mixed)).sum().iloc[0] != loop_sum
+    batches = [
+        [("k0", "u1", v, 0) for v in mixed]
+        + [("k1", "u1", 2.5, 0), ("k2", "u1", 1.0, 0), ("k0", "u2", 1.0, 0),
+           ("k0", None, 4.0, 0), ("k1", None, 0.5, 0), ("k0", None, 1.0, 0)],
+        # two epochs in one batch; u2 absent
+        [("k0", "u1", 1.0, 2), ("k0", "u1", 0.25, 1), ("k2", "u1", 1.5, 2),
+         ("k1", "u3", 7.0, 1), ("k1", None, 1.0, 2)],
+        [("k0", "u2", 2.0, 3), ("k1", "u1", 1.0, 3), ("k0", None, 3.0, 3)],
+        # late: u1's last on k0 is 2, epoch 1 arrives now and becomes the last
+        [("k0", "u1", 0.1, 1), ("k0", "u1", 0.2, 1), ("k0", "u1", 0.3, 1),
+         ("k1", "u3", 1.0, 4), ("k1", None, 2.0, 4)],
+        [("k0", "u1", 1.0, 5), ("k0", "u2", 1.0, 5), ("k2", "u3", 1.0, 5)],
+    ]
+
+    src = str(tmp_path / "src")
+    for i, rows in enumerate(batches):
+        spark.createDataFrame(rows, stamped_schema).coalesce(1).write.mode(
+            "overwrite" if i == 0 else "append"
+        ).parquet(src)
+        time.sleep(0.1)  # distinct mtimes: file-source batch order
+    stamped = (
+        spark.readStream.schema(stamped_schema).option("maxFilesPerTrigger", 1).parquet(src)
+    )
+    out: list = []
+    run_available_now(
+        prev_epoch_counts_stream(stamped)
+        .writeStream.outputMode("update")
+        .foreachBatch(lambda df, bid: out.append((bid, df.collect()))),
+        str(tmp_path / "ckpt"),
+    )
+    got = [
+        sorted((r["key"], r["epoch"], r["total"].hex(), r["prev_epoch"]) for r in rows)
+        for _, rows in sorted(out)
+        if rows
+    ]
+
+    last: dict = {}
+    want = []
+    for rows in batches:
+        pdf = pd.DataFrame(rows, columns=["key", "user", "value", "epoch"])
+        pdf["user"] = pdf["user"].fillna("<null>")
+        emitted = []
+        for (k, u), cell in pdf.groupby(["key", "user"], sort=True):
+            for epoch, total in cell.groupby("epoch", sort=True)["value"].sum().items():
+                emitted.append((k, int(epoch), float(total).hex(), last.get((k, u), -1)))
+                last[(k, u)] = int(epoch)
+        want.append(sorted(emitted))
+    assert got == want
+    # the reference encodes the late-epoch rule: u1's late epoch 1 on k0
+    # reads prev 2, then becomes the prev of its epoch 5
+    assert [r for r in want[3] if r[0] == "k0"] == [("k0", 1, (0.6).hex(), 2)]
+    assert [r for r in want[4] if r[0] == "k0" and r[3] == 1] == [("k0", 5, (1.0).hex(), 1)]
+
+
 def test_keyed_hot_key_state_is_bounded(spark, tmp_path):
     """10,000 users on ONE key: the DP state row stays the same size as
     a 10-user run (two O(T) trees + scalars — no user ids), and the

@@ -14,8 +14,9 @@ query progress:
 
 The knee is the first rate where both signals trip.  Stage 2
 (``prev_epoch_counts_stream``) is measured alone: it holds the
-per-(key, user) state and is the group-invocation-bound stage; stage
-3's per-key state is 50 groups and never the constraint (PLANS.md).
+per-user state (one Python group per user touched, here at most 400
+per batch) and is the group-invocation-bound stage; stage 3's per-key
+state is 50 groups and never the constraint (PLANS.md).
 
 Emits ``benchmark/keyed_saturation.csv``:
     mode,offered_rps,seconds,input_rows,wall_s,achieved_rps,

@@ -28,10 +28,10 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 NUM_KEYS = 1000
 NUM_USERS = 100_000
 
-# The keyed pipeline's stage 2 holds one state row per (key, user)
-# pair — the right layout for a cluster state store, but locally every
-# group is a PYTHON function invocation (~2k groups/s on local[32]),
-# so the local benchmark bounds the pair cardinality; see PLANS.md.
+# The keyed pipeline's stage 2 holds one state row per user, and
+# locally every group is a PYTHON function invocation (~2k groups/s
+# on local[32]), so the local benchmark bounds the user cardinality;
+# see PLANS.md.
 KEYED_NUM_KEYS = 50
 KEYED_NUM_USERS = 400
 
