@@ -8,7 +8,6 @@ Mirrors the reference's enclave DP package:
                  .../dp/StreamingDPMechanism.java), which packs its own
                  per-key state rows, and DPParams, whose ``mechanism``
                  is the one construction site (and noise seeding)
-- bounding.py    UserContributionLimiter (ref .../dp/UserContributionLimiter.java)
 - zipf.py        Zipf-Mandelbrot sampler (ref examples/synthetic-benchmark-
                  baseline/.../util/ZipfMandelbrotDistribution.java)
 """
@@ -30,7 +29,6 @@ from .calibration import (
     threshold_quantile,
 )
 from .mechanism import DPParams, StreamingDPMechanism
-from .bounding import UserContributionLimiter
 from .zipf import ZipfMandelbrot
 
 __all__ = [
@@ -40,7 +38,6 @@ __all__ = [
     "DpCalibration",
     "PerRoundBudget",
     "StreamingDPMechanism",
-    "UserContributionLimiter",
     "ZipfMandelbrot",
     "calibrate",
     "calculate_sigma",

@@ -94,13 +94,12 @@ class StreamingDPMechanism:
         self._predicted_release_times: dict[str, int] = {}
         self._observed_users: dict[str, set] = {}
         self._unreleased_buffer: dict[str, float] = {}
-        # staging window (drained by snapshot)
+        # staging window (drained by snapshot): per key, the total and
+        # the counts of contributing users by their PREVIOUS contribution
+        # epoch (-1 = first ever, which is how user-id calls record users
+        # new to the observed set); round_start per key makes new-user
+        # counting exact without user ids (see add_window_prev_counts)
         self._window_counts: dict[str, float] = {}
-        self._window_users: dict[str, set] = {}
-        # bounded-state alternative to user sets: per key, counts of
-        # contributing users by their PREVIOUS contribution epoch
-        # (-1 = first ever); round_start per key makes new-user counting
-        # exact without materializing user ids (see add_window_prev_counts)
         self._window_prev_counts: dict[str, dict[int, int]] = {}
         self._round_start: dict[str, int] = {}
         self._tau_vectors: dict[tuple[int, float], np.ndarray] = {}
@@ -111,15 +110,18 @@ class StreamingDPMechanism:
     def add_contribution(self, user_id, key: str, clamped_count: float) -> None:
         """Record one (already clamped and C-bounded) contribution for
         the current window."""
-        self._window_counts[key] = self._window_counts.get(key, 0.0) + clamped_count
-        self._window_users.setdefault(key, set()).add(user_id)
+        self.add_window(key, clamped_count, (user_id,))
 
     def add_window(self, key: str, total: float, users) -> None:
         """Bulk variant: record a whole window's pre-aggregated total
         and unique-user set for ``key`` (what the streaming operator
-        feeds after its per-epoch partial aggregation)."""
-        self._window_counts[key] = self._window_counts.get(key, 0.0) + float(total)
-        self._window_users.setdefault(key, set()).update(users)
+        feeds after its per-epoch partial aggregation).  Users not yet
+        observed this round join the key's observed set now and count
+        as first-ever contributors (``prev_epoch = -1``)."""
+        observed = self._observed_users.setdefault(key, set())
+        n_before = len(observed)
+        observed.update(users)
+        self.add_window_prev_counts(key, total, ((-1, len(observed) - n_before),))
 
     def add_window_prev_counts(self, key: str, total: float, prev_counts) -> None:
         """Skew-safe bulk variant: instead of the user-id set, take the
@@ -187,17 +189,15 @@ class StreamingDPMechanism:
         """Advance one time step and return the DP histogram
         (cumulative released sums, rounded, negatives clamped to 0,
         sorted by count descending)."""
-        window_counts, window_users = self._window_counts, self._window_users
-        window_prev_counts = self._window_prev_counts
-        self._window_counts, self._window_users = {}, {}
-        self._window_prev_counts = {}
+        window_counts, window_prev_counts = self._window_counts, self._window_prev_counts
+        self._window_counts, self._window_prev_counts = {}, {}
 
         if self.time_step >= self.max_time_steps:
             self._trim_expired_state()
             return self._produce_histogram()
 
         # keys needing processing: this window's keys + predicted releases due now
-        keys_to_process = set(window_counts) | set(window_prev_counts)
+        keys_to_process = set(window_counts)
         due = [k for k, t in self._predicted_release_times.items() if t == self.time_step]
         for k in due:
             del self._predicted_release_times[k]
@@ -206,7 +206,7 @@ class StreamingDPMechanism:
         # deterministic iteration order (set order varies with Python
         # hash randomization; noise draw order must be reproducible)
         for key in sorted(keys_to_process, key=str):
-            appeared = key in window_counts or key in window_prev_counts
+            appeared = key in window_counts
             count_input = window_counts.get(key, 0.0)
 
             # Algo 2 step 7: accumulate delta-V since last release
@@ -222,21 +222,12 @@ class StreamingDPMechanism:
             if tree is None:
                 tree = BinaryAggregationTree(self.max_time_steps, self.sigma_key, rng=self.rng)
                 self._key_selection_forest[key] = tree
-                self._observed_users.pop(key, None)
 
-            # Algo 1 step 7: count only NEW unique users this round —
-            # either against the materialized observed-user set, or
-            # (skew-safe path) from the previous-epoch counters
-            observed = self._observed_users.setdefault(key, set())
-            new_users = 0
-            for uid in window_users.get(key, ()):
-                if uid not in observed:
-                    observed.add(uid)
-                    new_users += 1
-            pc = window_prev_counts.get(key)
-            if pc:
-                round_start = self._round_start.get(key, 0)
-                new_users += sum(n for prev, n in pc.items() if prev < round_start)
+            # Algo 1 step 7: count only NEW unique users this round:
+            # those whose previous contribution predates the round
+            round_start = self._round_start.get(key, 0)
+            pc = window_prev_counts.get(key, {})
+            new_users = sum(n for prev, n in pc.items() if prev < round_start)
             tree.add(self.time_step, float(new_users))
 
             # Algo 1 steps 8-9: noisy count vs time-dependent threshold
@@ -318,7 +309,6 @@ class StreamingDPMechanism:
         self._predicted_release_times.clear()
         self._unreleased_buffer.clear()
         self._window_counts.clear()
-        self._window_users.clear()
         self._window_prev_counts.clear()
         self._round_start.clear()
 

@@ -1,4 +1,5 @@
-"""The one start-and-wait path for ``availableNow`` stages.
+"""The one start path for streaming queries, and the start-and-wait
+path for ``availableNow`` stages.
 
 Every chained streaming pipeline here runs as a sequence of
 ``availableNow`` queries: a stage drains all input present at start,
@@ -6,9 +7,11 @@ then the next stage reads its handoff.  A stage that is still running
 when the caller moves on leaves a half-written handoff behind, so the
 wait's outcome is part of the contract: a finished stage returns, a
 failed stage raises its failure, and a stage that outlives the wait is
-stopped and raises ``TimeoutError``.
+stopped and raises ``TimeoutError``.  A query with any other trigger
+(the rate-driven measurements in ``tools/rate_ramp.py``) starts
+through :func:`start` alone and is stopped by its caller.
 
-A stage starts with ``spark.sql.shuffle.partitions`` capped at
+A query starts with ``spark.sql.shuffle.partitions`` capped at
 ``sparkContext.defaultParallelism`` (the task slots).  AQE is off in
 streaming queries, so every shuffle partition is a task in every
 micro-batch, and in the ``applyInPandasWithState`` stages here each
@@ -47,28 +50,29 @@ from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 _SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
 
 
-def run_available_now(
-    writer: DataStreamWriter, checkpoint: str, timeout_s: float = 300
-) -> StreamingQuery:
-    """Start ``writer`` with ``trigger(availableNow=True)`` checkpointed
-    at ``checkpoint`` and wait until it has drained its input.  A new
+def start(writer: DataStreamWriter, checkpoint: str) -> StreamingQuery:
+    """Start ``writer`` checkpointed at ``checkpoint``; a new
     checkpoint gets at most one shuffle partition per task slot (see
-    the module docstring).  Returns the terminated query (its
-    ``recentProgress`` stays readable); raises the query's failure, or
-    stops it and raises ``TimeoutError`` once ``timeout_s`` seconds
-    pass."""
+    the module docstring).  Returns the running query."""
     spark = writer._df.sparkSession
     parts = spark.conf.get(_SHUFFLE_PARTITIONS)
     slots = spark.sparkContext.defaultParallelism
     spark.conf.set(_SHUFFLE_PARTITIONS, str(min(int(parts), slots)))
     try:
-        q = (
-            writer.option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
+        return writer.option("checkpointLocation", checkpoint).start()
     finally:
         spark.conf.set(_SHUFFLE_PARTITIONS, parts)
+
+
+def run_available_now(
+    writer: DataStreamWriter, checkpoint: str, timeout_s: float = 300
+) -> StreamingQuery:
+    """:func:`start` ``writer`` with ``trigger(availableNow=True)`` and
+    wait until it has drained its input.  Returns the terminated query
+    (its ``recentProgress`` stays readable); raises the query's
+    failure, or stops it and raises ``TimeoutError`` once
+    ``timeout_s`` seconds pass."""
+    q = start(writer.trigger(availableNow=True), checkpoint)
     if not q.awaitTermination(timeout_s):
         q.stop()
         raise TimeoutError(

@@ -153,19 +153,6 @@ def stamp_epoch_stream(events: DataFrame, path: str, checkpoint: str) -> Streami
 
 EVENT_STAMPED_SCHEMA = "key string, user_id string, value double, epoch int"
 
-_WINDOW_UNITS_US = {
-    "second": 1_000_000,
-    "minute": 60_000_000,
-    "hour": 3_600_000_000,
-    "day": 86_400_000_000,
-}
-
-
-def _window_micros(window: str) -> int:
-    n, unit = window.strip().split()
-    return int(n) * _WINDOW_UNITS_US[unit.rstrip("s")]
-
-
 def stamp_event_time_epoch_stream(
     events: DataFrame,
     path: str,
@@ -209,13 +196,13 @@ def stamp_event_time_epoch_stream(
     available input and returns the terminated query."""
     import datetime as dt
 
-    win_us = _window_micros(window)
     origin_us = int(
         dt.datetime.strptime(origin, "%Y-%m-%d")
         .replace(tzinfo=dt.timezone.utc)
         .timestamp()
         * 1_000_000
     )
+    start = F.unix_micros(F.col("window.start"))
     stamped = (
         events.withWatermark(ts_col, delay)
         .groupBy(F.window(F.col(ts_col), window), F.col(key_col), F.col(user_col))
@@ -224,7 +211,7 @@ def stamp_event_time_epoch_stream(
             F.col(key_col).cast("string").alias("key"),
             F.col(user_col).cast("string").alias("user_id"),
             F.col("_total").cast("double").alias("value"),
-            ((F.unix_micros(F.col("window.start")) - F.lit(origin_us)) / F.lit(win_us))
+            ((start - F.lit(origin_us)) / (F.unix_micros(F.col("window.end")) - start))
             .cast("int")
             .alias("epoch"),
         )

@@ -9,8 +9,7 @@ hot/cold key-selection gates (:228-264), sensitivity-1 user dedup
 import numpy as np
 import pytest
 
-from confidential_storm_spark.dp import DPParams, StreamingDPMechanism, UserContributionLimiter
-from confidential_storm_spark.dp.bounding import clamp
+from confidential_storm_spark.dp import DPParams, StreamingDPMechanism
 
 T = 100
 QUANTILE = 4.2649  # Phi^-1(1 - 1e-5), the reference's test quantile
@@ -219,15 +218,3 @@ def test_dpparams_mechanism_is_the_seeded_stream():
     r1, r2 = unseeded.for_release(), unseeded.for_release()
     assert r1.seed is not None and r1.seed != r2.seed
     assert r1.mechanism(0).rng.normal() == r1.mechanism(0).rng.normal()
-
-
-def test_contribution_limiter():
-    lim = UserContributionLimiter()
-    accepted = sum(lim.allow("u1", 3) for _ in range(5))
-    assert accepted == 3
-    assert lim.allow(None, 3) is True  # event-level privacy
-    assert lim.allow_many("u2", 10, 4) == 4
-    assert lim.allow_many("u2", 10, 4) == 0
-    assert clamp(5.0, 1.0) == 1.0
-    assert clamp(-5.0, 1.0) == -1.0
-    assert clamp(0.3, 1.0) == 0.3

@@ -17,7 +17,7 @@ from confidential_storm_spark.streaming import (
     dp_histogram_stream,
     replay_filter_stream,
 )
-from confidential_storm_spark.streaming._drain import run_available_now
+from confidential_storm_spark.streaming._drain import run_available_now, start
 
 
 def _run_stream(stream_df, out: list, mode: str = "update"):
@@ -175,6 +175,36 @@ def test_available_now_caps_new_state_partitions(spark, tmp_path):
         q = run_available_now(counts_writer(capped), str(tmp_path / "new"))
         assert state_partitions(q) == {slots}
         assert capped == direct == {k: 20 for k in range(5)}
+        assert spark.conf.get(key) == "8"
+    finally:
+        spark.conf.set(key, prev)
+
+
+def test_started_run_caps_state_partitions(spark, tmp_path):
+    """A query that is not availableNow (here the default
+    processing-time trigger, as in the rate-driven tools) started
+    through ``_drain.start`` gets the same one-state-partition-per-slot
+    cap, and the session keeps its own setting."""
+    key = "spark.sql.shuffle.partitions"
+    slots = spark.sparkContext.defaultParallelism
+    src = str(tmp_path / "src")
+    spark.range(40).selectExpr("id % 5 AS k").write.parquet(src)
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "8")
+    try:
+        q = start(
+            spark.readStream.schema("k long").parquet(src).groupBy("k").count()
+            .writeStream.outputMode("update").format("noop"),
+            str(tmp_path / "ckpt"),
+        )
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+        parts = {
+            op["numShufflePartitions"] for p in q.recentProgress for op in p["stateOperators"]
+        }
+        assert parts == {slots} and slots < 8
         assert spark.conf.get(key) == "8"
     finally:
         spark.conf.set(key, prev)

@@ -576,6 +576,40 @@ def test_keyed_event_time_drops_pre_origin_windows(spark, tmp_path):
     assert _final_counts(res["batches"]) == batch == {"a": 2}
 
 
+def test_keyed_event_time_compound_window(spark, tmp_path):
+    """A compound window such as ``"1 hour 30 minutes"`` is any window
+    ``F.window`` accepts: epochs count whole windows since ``origin``,
+    measured on the window column itself."""
+    import datetime as dt
+
+    def ts(hour, minute):
+        return dt.datetime(2024, 1, 1, hour, minute)
+
+    ev_schema = "user_id string, key string, value double, event_time timestamp"
+    rows = [
+        ("u1", "a", 1.0, ts(0, 10)),  # [00:00, 01:30) -> epoch 0
+        ("u2", "a", 1.0, ts(1, 40)),  # [01:30, 03:00) -> epoch 1
+        ("u3", "b", 1.0, ts(2, 59)),  # [01:30, 03:00) -> epoch 1
+        ("u1", "b", 1.0, ts(4, 0)),  # [03:00, 04:30) -> epoch 2
+    ]
+    src = str(tmp_path / "src")
+    spark.createDataFrame(rows, ev_schema).coalesce(1).write.parquet(src)
+    # heartbeat tick far ahead: every real window closes in the drain
+    spark.createDataFrame(
+        [("hb", "hb", 0.0, dt.datetime(2024, 1, 2))], ev_schema
+    ).coalesce(1).write.mode("append").parquet(src)
+    reader = spark.readStream.schema(ev_schema).option("maxFilesPerTrigger", 1).parquet(src)
+    res = run_keyed_dp_available_now(
+        spark, reader, DPParams.zero_noise(t=10, mu=0), str(tmp_path / "wd"), ev_schema,
+        epoch_mode="event_time", window="1 hour 30 minutes", delay="1 hour 30 minutes",
+    )
+    emitted = [r for _, rows in res["batches"] for r in rows]
+    assert {(r["key"], r["epoch"]) for r in emitted} == {
+        ("a", 0), ("a", 1), ("b", 1), ("b", 2)
+    }
+    assert _final_counts(res["batches"]) == {"a": 2, "b": 2}
+
+
 def test_keyed_pipeline_on_rocksdb_state_store(spark, tmp_path):
     """The 100 TB state backend: HDFSBackedStateStore holds every
     state row on the JVM heap, so a 1M-key DP state store is

@@ -87,8 +87,8 @@ def main() -> int:
     # the streaming replays are CERTIFICATION harnesses: epoch files
     # are materialized driver-side by design (streaming/replay.py),
     # so an sf10 run times pandas materialization, not the operator —
-    # the operators' scale stories are the streaming bench tools
-    # (tools/streaming_bench.py, keyed_saturation.py, sketch sweeps)
+    # the operators' scale stories are the rate-driven ramps
+    # (tools/rate_ramp.py) and the sketch sweeps
     skip.update(
         {
             k: "certification replay harness (driver-side epochs by design)"

@@ -9,13 +9,14 @@ Usage: python tools/check_correctness.py [sf_dir] [query ...]
 from __future__ import annotations
 
 import hashlib
+import os
 import sys
 import time
 
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
 
@@ -43,8 +44,6 @@ def main() -> int:
     # depend on our session factory's configs.  CORES / SHUFFLE env
     # overrides drive the determinism sweep (PLANS.md): the gate must
     # pass under ANY task parallelism and shuffle layout.
-    import os
-
     from pyspark.sql import SparkSession
 
     cores = os.environ.get("SPARK_GRAFT_CHECK_CORES", "*")
