@@ -102,7 +102,7 @@ def open_sealed(envelope: Column, key: Column, cast_to: str = "string") -> Colum
     return plain.cast("string").cast(cast_to)
 
 
-def try_open_sealed(envelope: Column, key: Column, cast_to: str = "string") -> Column:
+def try_open_sealed(envelope: Column, key: Column) -> Column:
     """P8 (lenient): returns NULL instead of failing on bad tag/AAD —
     the filterable form of the reference's verify-reject path."""
     plain = F.try_aes_decrypt(
@@ -112,7 +112,7 @@ def try_open_sealed(envelope: Column, key: Column, cast_to: str = "string") -> C
         F.lit("DEFAULT"),
         envelope.getField("aad").cast("binary"),
     )
-    return plain.cast("string").cast(cast_to)
+    return plain.cast("string")
 
 
 def seal_none(plaintext: Column, aad: Column) -> Column:
@@ -125,8 +125,8 @@ def seal_none(plaintext: Column, aad: Column) -> Column:
     )
 
 
-def open_none(envelope: Column, cast_to: str = "string") -> Column:
-    return envelope.getField("ciphertext").cast("string").cast(cast_to)
+def open_none(envelope: Column) -> Column:
+    return envelope.getField("ciphertext").cast("string")
 
 
 def verify_consistency(df: DataFrame, envelope_cols: list[str]) -> DataFrame:
@@ -190,7 +190,7 @@ def chacha20_seal(plaintext: Column, key: bytes, aad: Column) -> Column:
     )
 
 
-def chacha20_open(envelope: Column, key: bytes, cast_to: str = "string") -> Column:
+def chacha20_open(envelope: Column, key: bytes) -> Column:
     """Open a ChaCha20-Poly1305 envelope; NULL on tamper (lenient,
     like :func:`try_open_sealed`)."""
     ChaCha20Poly1305 = _require_chacha20()
@@ -210,7 +210,6 @@ def chacha20_open(envelope: Column, key: bytes, cast_to: str = "string") -> Colu
         return pd.Series(out, dtype=object)
 
     udf = pandas_udf(open_batch, "string")
-    plain = udf(
+    return udf(
         envelope.getField("nonce"), envelope.getField("ciphertext"), envelope.getField("aad")
     )
-    return plain.cast(cast_to)

@@ -3,9 +3,9 @@
 Semantics port of the reference's
 ``confidentialstorm/enclave/src/main/java/ch/usi/inf/confidentialstorm/enclave/security/ReplayWindow.java``
 (accept :44-105): track the highest sequence seen per producer plus a
-``window_size``-bit mask anchored with ``max_seen`` at bit 0; reject
-negatives, anything at or below ``max_seen - window_size``, and
-duplicates; a forward jump >= window_size clears all history.
+``WINDOW_SIZE``-bit mask anchored with ``max_seen`` at bit 0;
+reject negatives, anything at or below ``max_seen - WINDOW_SIZE``,
+and duplicates; a forward jump >= WINDOW_SIZE clears all history.
 
 The state is two values — ``(max_seen: int, mask: int)`` — so it
 serializes directly into a Spark state store row (the streaming
@@ -16,12 +16,10 @@ from __future__ import annotations
 
 __all__ = ["ReplayWindow", "replay_accept"]
 
-DEFAULT_WINDOW_SIZE = 128
+WINDOW_SIZE = 128  # ref ReplayWindow.java:9-33
 
 
-def replay_accept(
-    max_seen: int, mask: int, sequence: int, window_size: int = DEFAULT_WINDOW_SIZE
-) -> tuple[bool, int, int]:
+def replay_accept(max_seen: int, mask: int, sequence: int) -> tuple[bool, int, int]:
     """Pure-functional accept step: returns (accepted, max_seen', mask').
 
     ``mask`` bit ``i`` == sequence ``max_seen - i`` already seen.
@@ -29,17 +27,17 @@ def replay_accept(
     """
     if sequence < 0:
         return False, max_seen, mask
-    if max_seen >= 0 and sequence <= max_seen - window_size:
+    if max_seen >= 0 and sequence <= max_seen - WINDOW_SIZE:
         return False, max_seen, mask
     if sequence > max_seen:
         shift = sequence - max_seen
-        if max_seen < 0 or shift >= window_size:
+        if max_seen < 0 or shift >= WINDOW_SIZE:
             mask = 0
         else:
-            mask = (mask << shift) & ((1 << window_size) - 1)
+            mask = (mask << shift) & ((1 << WINDOW_SIZE) - 1)
         return True, sequence, mask | 1
     offset = max_seen - sequence
-    if offset >= window_size:
+    if offset >= WINDOW_SIZE:
         return False, max_seen, mask
     bit = 1 << offset
     if mask & bit:
@@ -50,13 +48,10 @@ def replay_accept(
 class ReplayWindow:
     """Stateful wrapper matching the reference's object API."""
 
-    def __init__(self, window_size: int = DEFAULT_WINDOW_SIZE):
-        self.window_size = window_size
+    def __init__(self):
         self.max_seen = -1
         self.mask = 0
 
     def accept(self, sequence: int) -> bool:
-        ok, self.max_seen, self.mask = replay_accept(
-            self.max_seen, self.mask, sequence, self.window_size
-        )
+        ok, self.max_seen, self.mask = replay_accept(self.max_seen, self.mask, sequence)
         return ok

@@ -19,15 +19,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .replay import WINDOW_SIZE
+
 __all__ = [
     "validate_routes",
     "replay_filter",
     "stamp_sequence",
     "routing_key",
-    "REPLAY_WINDOW_SIZE",
 ]
-
-REPLAY_WINDOW_SIZE = 128  # ref ReplayWindow.java:9-33
 
 
 def routing_key(prefix: str, col) -> "F.Column":
@@ -40,14 +39,8 @@ def routing_key(prefix: str, col) -> "F.Column":
     return F.sha2(F.concat(F.lit(prefix), F.col(col) if isinstance(col, str) else col), 256)
 
 
-def validate_routes(
-    df: DataFrame,
-    edges: DataFrame,
-    source_col: str = "source",
-    dest_col: str = "destination",
-    reject: bool = False,
-) -> DataFrame:
-    """V1: keep rows whose (source, destination) is a declared DAG edge
+def validate_routes(df: DataFrame, edges: DataFrame, reject: bool = False) -> DataFrame:
+    """V1: keep rows whose (``source``, ``destination``) is a declared DAG edge
     (ref ConfidentialBoltService.verify:216-234; edges from the
     encrypted adjacency list, TopologyGraphGenerator.java:21-46).
 
@@ -61,21 +54,17 @@ def validate_routes(
     )
     joined = df.join(
         e,
-        (F.lower(F.col(source_col)) == F.col("src"))
-        & (F.lower(F.col(dest_col)) == F.col("dst")),
+        (F.lower(F.col("source")) == F.col("src"))
+        & (F.lower(F.col("destination")) == F.col("dst")),
         "left_semi" if not reject else "left_anti",
     )
     return joined
 
 
-def replay_filter(
-    df: DataFrame,
-    producer_col: str = "producer_id",
-    seq_col: str = "seq",
-    window_size: int = REPLAY_WINDOW_SIZE,
-) -> DataFrame:
-    """V2 (batch analog): accept each (producer, seq) once, and only if
-    ``seq`` lies within ``window_size`` of the producer's max seq
+def replay_filter(df: DataFrame) -> DataFrame:
+    """V2 (batch analog): accept each (``producer_id``, ``seq``) once, and
+    only if ``seq`` lies within the reference's 128-sequence window of the
+    producer's max seq
     (ref ReplayWindow.accept:44-105 — reject duplicates and anything
     older than max_seen - window).
 
@@ -83,22 +72,18 @@ def replay_filter(
     in the stateful streaming operator; over a complete batch the
     accepted set is exactly: distinct seqs in (max(seq)-window, max(seq)].
     """
-    w = Window.partitionBy(producer_col)
+    w = Window.partitionBy("producer_id")
     return (
-        df.dropDuplicates([producer_col, seq_col])
-        .withColumn("_max_seen", F.max(seq_col).over(w))
-        .filter(F.col(seq_col) > F.col("_max_seen") - window_size)
+        df.dropDuplicates(["producer_id", "seq"])
+        .withColumn("_max_seen", F.max("seq").over(w))
+        .filter(F.col("seq") > F.col("_max_seen") - WINDOW_SIZE)
         .drop("_max_seen")
     )
 
 
-def stamp_sequence(
-    df: DataFrame,
-    producer_col: str = "producer_id",
-    order_cols: tuple[str, ...] = ("event_time", "event_id"),
-    out_col: str = "seq_out",
-) -> DataFrame:
-    """V4: per-producer monotonic sequence numbers (ref
+def stamp_sequence(df: DataFrame) -> DataFrame:
+    """V4: per-producer monotonic sequence numbers ``seq_out`` in
+    (``event_time``, ``event_id``) order (ref
     ConfidentialBoltService.java:64-73 keeps one counter per task)."""
-    w = Window.partitionBy(producer_col).orderBy(*[F.col(c) for c in order_cols])
-    return df.withColumn(out_col, F.row_number().over(w))
+    w = Window.partitionBy("producer_id").orderBy(F.col("event_time"), F.col("event_id"))
+    return df.withColumn("seq_out", F.row_number().over(w))

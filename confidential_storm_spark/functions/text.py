@@ -96,10 +96,10 @@ def clean_text(text: Column) -> Column:
     return out
 
 
-def clean_text_sql(col: str = "text") -> str:
-    """DuckDB twin of :func:`clean_text` (RE2 needs the explicit 'g'
-    flag — DuckDB replaces only the first match by default)."""
-    out = col
+def clean_text_sql() -> str:
+    """DuckDB twin of :func:`clean_text` over ``text`` (RE2 needs the
+    explicit 'g' flag — DuckDB replaces only the first match by default)."""
+    out = "text"
     for pat, rep in _CLEAN_STEPS:
         out = f"regexp_replace({out}, '{pat}', '{rep}', 'g')"
     return out
@@ -139,10 +139,11 @@ def nfc_lower_sql(col: str = "text") -> str:
     return f"lower(nfc_normalize({col}))"
 
 
-def explode_words(df: DataFrame, text_col: str = "text", out_col: str = "word") -> DataFrame:
-    """P1: one row per word (the reference emits one tuple per word
-    with count=1; SplitSentenceBolt.java:36-56)."""
-    return df.withColumn(out_col, F.explode(words(F.col(text_col))))
+def explode_words(df: DataFrame) -> DataFrame:
+    """P1: one row per word of ``text``, in column ``word`` (the
+    reference emits one tuple per word with count=1;
+    SplitSentenceBolt.java:36-56)."""
+    return df.withColumn("word", F.explode(words(F.col("text"))))
 
 
 def token_count(text: Column) -> Column:
@@ -178,12 +179,10 @@ def quality_features(
     )
 
 
-def repetition_signals(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def repetition_signals(df: DataFrame) -> DataFrame:
     """Gopher-style repetition quality signals (Rae et al. 2021,
     arXiv:2112.11446 §A1.1 — the standard LLM-data repetition
-    filters): per document,
+    filters): per document ``doc_id`` of ``text``,
 
     - ``dup_word_frac``  = 1 - distinct_words / total_words
     - ``top_word_frac``  = occurrences of the most common word / total
@@ -193,15 +192,15 @@ def repetition_signals(
     Scale shape: explode -> two-level groupBy — partial aggregation
     (map-side combine) collapses each doc's words before the shuffle,
     so shuffle volume is O(distinct words per doc), and both groupBys
-    hash-partition on ``id_col`` so the second reuses the first's
+    hash-partition on ``doc_id`` so the second reuses the first's
     partitioning.  No Python, no per-row HOF quadratics."""
-    ws = words(F.col(text_col))
-    base = df.select(F.col(id_col), ws.alias("_ws"))
+    ws = words(F.col("text"))
+    base = df.select(F.col("doc_id"), ws.alias("_ws"))
     uni = (
-        base.select(id_col, F.explode("_ws").alias("_w"))
-        .groupBy(id_col, "_w")
+        base.select("doc_id", F.explode("_ws").alias("_w"))
+        .groupBy("doc_id", "_w")
         .agg(F.count(F.lit(1)).alias("_c"))
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.sum("_c").alias("_n"),
             F.max("_c").alias("_m"),
@@ -218,18 +217,18 @@ def repetition_signals(
         ),
     ).otherwise(F.array().cast("array<string>"))
     bi = (
-        base.select(id_col, F.explode(bigrams).alias("_b"))
-        .groupBy(id_col, "_b")
+        base.select("doc_id", F.explode(bigrams).alias("_b"))
+        .groupBy("doc_id", "_b")
         .agg(F.count(F.lit(1)).alias("_c"))
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(F.sum("_c").alias("_bn"), F.max("_c").alias("_bm"))
     )
     return (
-        df.select(id_col)
-        .join(uni, id_col, "left")
-        .join(bi, id_col, "left")
+        df.select("doc_id")
+        .join(uni, "doc_id", "left")
+        .join(bi, "doc_id", "left")
         .select(
-            id_col,
+            "doc_id",
             F.round(
                 F.coalesce(
                     F.lit(1.0) - F.col("_d").cast("double") / F.col("_n"), F.lit(0.0)
@@ -246,11 +245,11 @@ def repetition_signals(
     )
 
 
-def repetition_signals_sql(col: str = "text", table: str = "documents") -> str:
-    """DuckDB twin of :func:`repetition_signals`."""
-    ws = words_sql(col)
+def repetition_signals_sql() -> str:
+    """DuckDB twin of :func:`repetition_signals` over ``documents``."""
+    ws = words_sql("text")
     return f"""
-WITH t AS (SELECT doc_id, {ws} AS ws FROM {table}),
+WITH t AS (SELECT doc_id, {ws} AS ws FROM documents),
 u AS (SELECT doc_id, w, COUNT(*) AS c
       FROM (SELECT doc_id, unnest(ws) AS w FROM t) GROUP BY doc_id, w),
 us AS (SELECT doc_id, CAST(SUM(c) AS BIGINT) AS n, MAX(c) AS m, COUNT(*) AS d
@@ -294,18 +293,15 @@ def lang_pred_expr(text: Column) -> tuple[Column, Column]:
     return pred, best
 
 
-def lang_id(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    lang_col: str = "lang",
-) -> DataFrame:
-    """Keyword-marker language ID: score = number of marker-word hits
-    per language; argmax with deterministic tie-break order."""
-    pred, best = lang_pred_expr(F.col(text_col))
+def lang_id(df: DataFrame) -> DataFrame:
+    """Keyword-marker language ID of ``text``: score = number of
+    marker-word hits per language; argmax with deterministic tie-break
+    order.  Returns ``doc_id``, the labelled ``lang`` as ``true_lang``,
+    ``pred_lang`` and ``best_score``."""
+    pred, best = lang_pred_expr(F.col("text"))
     return df.select(
-        id_col,
-        F.col(lang_col).alias("true_lang"),
+        "doc_id",
+        F.col("lang").alias("true_lang"),
         pred.alias("pred_lang"),
         best.alias("best_score"),
     )
@@ -341,10 +337,10 @@ def words_sql(col: str = "text") -> str:
     return WORDS_SQL.format(col=col)
 
 
-def fingerprint_sql(col: str = "text") -> str:
+def fingerprint_sql() -> str:
     return (
         f"list_reduce(list_prepend(CAST(0 AS BIGINT), "
-        f"list_transform({words_sql(col)}, "
+        f"list_transform({words_sql('text')}, "
         f"w -> CAST('0x' || substr(md5(w), 1, 8) AS BIGINT) % {FP_PRIME})), "
         f"(acc, h) -> (acc * {FP_MULTIPLIER} + h) % {FP_PRIME})"
     )
@@ -401,18 +397,24 @@ def bpe_tokens_sql(col: str = "text") -> str:
 # ---------------------------------------------------------------------------
 
 
+# char k-gram length and window size of the winnowing fingerprints
+WINNOW_K = 5
+WINNOW_W = 4
+
+
 def _winnow_norm(text: Column) -> Column:
     """Winnowing normalization: lowercase, strip non-alphanumerics
     (whitespace/punct-insensitive matching)."""
     return F.regexp_replace(F.lower(text), "[^a-z0-9]", "")
 
 
-def winnow_grams(text: Column, k: int = 5) -> Column:
+def winnow_grams(text: Column) -> Column:
     """Step 1 of winnowing: hashes of every char k-gram of the
     normalized text (md5-prefix mod p, oracle-reproducible).  Docs
     shorter than k chars get an empty array.  (Spark's
     ``sequence(1, 0)`` DESCENDS instead of yielding empty, hence the
     explicit ``when`` guard.)"""
+    k = WINNOW_K
     norm = _winnow_norm(text)
     n_grams = F.length(norm) - (k - 1)
     return F.when(
@@ -425,7 +427,7 @@ def winnow_grams(text: Column, k: int = 5) -> Column:
     ).otherwise(F.array().cast("array<long>"))
 
 
-def winnow_from_grams(grams: Column, w: int = 4) -> Column:
+def winnow_from_grams(grams: Column) -> Column:
     """Step 2 of winnowing: slide a w-window over the gram-hash array,
     keep each window's minimum, dedupe, sort.  Guarantees any shared
     substring of length >= w + k - 1 shares a fingerprint — the
@@ -436,6 +438,7 @@ def winnow_from_grams(grams: Column, w: int = 4) -> Column:
     first) — Spark evaluates higher-order lambdas interpreted and
     re-embeds the argument expression once per window, so an inline
     :func:`winnow_grams` argument turns quadratic in doc length."""
+    w = WINNOW_W
     n_windows = F.greatest(F.size(grams) - (w - 1), F.least(F.size(grams), F.lit(1)))
     return F.when(
         F.size(grams) >= 1,
@@ -450,15 +453,7 @@ def winnow_from_grams(grams: Column, w: int = 4) -> Column:
     ).otherwise(F.array().cast("array<long>"))
 
 
-def winnow_fingerprints(text: Column, k: int = 5, w: int = 4) -> Column:
-    """One-expression convenience form of winnowing — ONLY for short
-    strings: the nested lambda re-evaluates the gram pipeline per
-    window (see :func:`winnow_from_grams`).  Pipelines should do
-    ``.withColumn("g", winnow_grams(text)).select(winnow_from_grams(F.col("g")))``."""
-    return winnow_from_grams(winnow_grams(text, k), w)
-
-
-def winnow_udf(text: Column, k: int = 5, w: int = 4) -> Column:
+def winnow_udf(text: Column) -> Column:
     """Arrow-batched twin of the two-step winnowing producing IDENTICAL
     fingerprints (md5-prefix gram hashes, per-window min, distinct,
     sorted).  The expression form runs Spark's interpreted lambda
@@ -471,6 +466,7 @@ def winnow_udf(text: Column, k: int = 5, w: int = 4) -> Column:
     from pyspark.sql.functions import pandas_udf
 
     non_alnum = _re.compile(r"[^a-z0-9]")
+    k, w = WINNOW_K, WINNOW_W
 
     def batch(texts: pd.Series) -> pd.Series:
         out = []
@@ -499,19 +495,22 @@ def winnow_udf(text: Column, k: int = 5, w: int = 4) -> Column:
     return pandas_udf(batch, "array<long>")(text)
 
 
-def winnow_grams_sql(col: str = "text", k: int = 5) -> str:
-    """DuckDB twin of :func:`winnow_grams` (``range`` has an exclusive
-    end and yields empty naturally, so no short-doc guard needed)."""
-    norm = f"regexp_replace(lower({col}), '[^a-z0-9]', '', 'g')"
+def winnow_grams_sql() -> str:
+    """DuckDB twin of :func:`winnow_grams` over ``text`` (``range`` has
+    an exclusive end and yields empty naturally, so no short-doc guard
+    needed)."""
+    k = WINNOW_K
+    norm = "regexp_replace(lower(text), '[^a-z0-9]', '', 'g')"
     return (
         f"list_transform(range(1, greatest(len({norm}) - {k - 1}, 0) + 1), "
         f"i -> CAST('0x' || substr(md5(substr({norm}, i, {k})), 1, 8) AS BIGINT) % {FP_PRIME})"
     )
 
 
-def winnow_from_grams_sql(gcol: str, w: int = 4) -> str:
+def winnow_from_grams_sql(gcol: str) -> str:
     """DuckDB twin of :func:`winnow_from_grams`; bind the grams in a
     CTE first, mirroring the Spark two-step form."""
+    w = WINNOW_W
     n_windows = f"greatest(len({gcol}) - {w - 1}, least(len({gcol}), 1))"
     return (
         f"list_sort(list_distinct(list_transform("
@@ -568,45 +567,44 @@ def redact_pii_sql(col: str = "text") -> str:
 # ---------------------------------------------------------------------------
 
 
-def unigram_surprisal(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """Per-doc mean unigram surprisal ``-ln p(w)`` under the corpus's
-    OWN unigram distribution — the cheap proxy for LM-perplexity
-    quality filtering (atypical/garbled docs score high, boilerplate
-    scores low).  Two aggregations: global word frequencies (a small
-    relation, broadcast back), then a per-doc mean.  Both are
+def unigram_surprisal(df: DataFrame) -> DataFrame:
+    """Per-``doc_id`` mean unigram surprisal ``-ln p(w)`` of ``text``
+    under the corpus's OWN unigram distribution — the cheap proxy for
+    LM-perplexity quality filtering (atypical/garbled docs score high,
+    boilerplate scores low).  Two aggregations: global word
+    frequencies (a small relation, broadcast back), then a per-doc
+    mean.  Both are
     partial-aggregated map-side; nothing leaves the JVM."""
-    toks = df.select(F.col(id_col), F.explode(words(F.col(text_col))).alias("_w"))
+    toks = df.select(F.col("doc_id"), F.explode(words(F.col("text"))).alias("_w"))
     freqs = toks.groupBy("_w").agg(F.count(F.lit(1)).alias("_c"))
     total = toks.count()
     scored = toks.join(F.broadcast(freqs), "_w").select(
-        id_col,
+        "doc_id",
         (-F.log(F.col("_c") / F.lit(float(total)))).alias("_s"),
     )
-    per_doc = scored.groupBy(id_col).agg(
+    per_doc = scored.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_tokens"),
         F.round(F.avg("_s"), 6).alias("mean_surprisal"),
     )
     return (
-        df.select(id_col)
-        .join(per_doc, id_col, "left")
+        df.select("doc_id")
+        .join(per_doc, "doc_id", "left")
         .select(
-            id_col,
+            "doc_id",
             F.coalesce("n_tokens", F.lit(0)).cast("int").alias("n_tokens"),
             F.coalesce("mean_surprisal", F.lit(0.0)).alias("mean_surprisal"),
         )
     )
 
 
-def bigram_cross_entropy(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    alpha: float = 0.5,
-) -> DataFrame:
-    """Per-doc mean bigram cross-entropy ``-avg ln P(w_i | w_{i-1})``
-    under the corpus's OWN add-alpha bigram LM,
+# add-alpha smoothing of the bigram LM
+_BIGRAM_ALPHA = 0.5
+
+
+def bigram_cross_entropy(df: DataFrame) -> DataFrame:
+    """Per-``doc_id`` mean bigram cross-entropy
+    ``-avg ln P(w_i | w_{i-1})`` of ``text`` under the corpus's OWN
+    add-alpha (a = 0.5) bigram LM,
     ``P(w|v) = (c(v,w) + a) / (c(v) + a*V)`` — the sequence-aware
     upgrade of :func:`unigram_surprisal`: shuffled/garbled word order
     scores high even when every individual word is common, which a
@@ -620,10 +618,10 @@ def bigram_cross_entropy(
     it and Catalyst shuffle-joins).  Docs with < 2 words score 0 with
     ``n_bigrams = 0``.
     """
-    ws = df.select(F.col(id_col), words(F.col(text_col)).alias("_ws"))
+    ws = df.select(F.col("doc_id"), words(F.col("text")).alias("_ws"))
     # sequence(1, 0) would count DOWN, so guard short docs explicitly
     bg = ws.select(
-        id_col,
+        "doc_id",
         F.explode(
             F.expr(
                 "CASE WHEN size(_ws) >= 2 THEN transform(sequence(1, size(_ws) - 1), "
@@ -631,7 +629,7 @@ def bigram_cross_entropy(
                 "ELSE array() END"
             )
         ).alias("_bg"),
-    ).select(id_col, F.col("_bg.v").alias("v"), F.col("_bg.w").alias("w"))
+    ).select("doc_id", F.col("_bg.v").alias("v"), F.col("_bg.w").alias("w"))
     vocab = (
         ws.select(F.explode("_ws").alias("_w")).select("_w").distinct().count()
     )
@@ -641,39 +639,38 @@ def bigram_cross_entropy(
         bg.join(F.broadcast(cbw), ["v", "w"])
         .join(F.broadcast(cv), "v")
         .select(
-            id_col,
+            "doc_id",
             (
                 -F.log(
-                    (F.col("_cbw") + F.lit(alpha))
-                    / (F.col("_cv") + F.lit(alpha * vocab))
+                    (F.col("_cbw") + F.lit(_BIGRAM_ALPHA))
+                    / (F.col("_cv") + F.lit(_BIGRAM_ALPHA * vocab))
                 )
             ).alias("_s"),
         )
     )
-    per_doc = scored.groupBy(id_col).agg(
+    per_doc = scored.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_bigrams"),
         F.round(F.avg("_s"), 6).alias("cross_entropy"),
     )
     return (
-        df.select(id_col)
-        .join(per_doc, id_col, "left")
+        df.select("doc_id")
+        .join(per_doc, "doc_id", "left")
         .select(
-            id_col,
+            "doc_id",
             F.coalesce("n_bigrams", F.lit(0)).cast("int").alias("n_bigrams"),
             F.coalesce("cross_entropy", F.lit(0.0)).alias("cross_entropy"),
         )
     )
 
 
-def bigram_cross_entropy_sql(
-    col: str = "text", table: str = "documents", alpha: float = 0.5
-) -> str:
-    """DuckDB twin of :func:`bigram_cross_entropy` (identical counts,
-    smoothing, and ln arithmetic; V computed in-query — same value the
-    Spark path embeds as a literal)."""
-    ws = words_sql(col)
+def bigram_cross_entropy_sql() -> str:
+    """DuckDB twin of :func:`bigram_cross_entropy` over ``documents``
+    (identical counts, smoothing, and ln arithmetic; V computed
+    in-query — same value the Spark path embeds as a literal)."""
+    ws = words_sql("text")
+    alpha = _BIGRAM_ALPHA
     return f"""
-WITH t AS (SELECT doc_id, {ws} AS ws FROM {table}),
+WITH t AS (SELECT doc_id, {ws} AS ws FROM documents),
 v_cte AS (SELECT COUNT(DISTINCT w) AS vs FROM (SELECT unnest(ws) AS w FROM t)),
 idx AS (SELECT doc_id, ws, unnest(range(2, len(ws) + 1)) AS i FROM t),
 tok AS (SELECT doc_id, ws[i - 1] AS v, ws[i] AS w FROM idx),
@@ -692,11 +689,11 @@ ORDER BY t.doc_id
 """
 
 
-def unigram_surprisal_sql(col: str = "text", table: str = "documents") -> str:
-    """DuckDB twin of :func:`unigram_surprisal`."""
-    ws = words_sql(col)
+def unigram_surprisal_sql() -> str:
+    """DuckDB twin of :func:`unigram_surprisal` over ``documents``."""
+    ws = words_sql("text")
     return f"""
-WITH t AS (SELECT doc_id, {ws} AS ws FROM {table}),
+WITH t AS (SELECT doc_id, {ws} AS ws FROM documents),
 tok AS (SELECT doc_id, unnest(ws) AS w FROM t),
 freq AS (SELECT w, COUNT(*) AS c FROM tok GROUP BY w),
 tot AS (SELECT COUNT(*) AS n FROM tok),
@@ -744,17 +741,18 @@ def char_entropy(text: Column) -> Column:
     return _ent(text)
 
 
-def char_entropy_sql(col: str = "text") -> str:
-    """DuckDB twin of :func:`char_entropy` as a pure scalar expression
-    (per-row list algebra: distinct symbols -> counts -> -sum p log2 p;
-    quadratic in per-doc alphabet size, fine for an oracle).
+def char_entropy_sql() -> str:
+    """DuckDB twin of :func:`char_entropy` over ``text`` as a pure
+    scalar expression (per-row list algebra: distinct symbols -> counts
+    -> -sum p log2 p; quadratic in per-doc alphabet size, fine for an
+    oracle).
     ``list_sort`` pins the summation order to the Spark UDF's sorted
     np.unique fold (UTF-8 binary order == code-point order)."""
-    cs = f"string_split({col}, '')"
+    cs = "string_split(text, '')"
     return (
-        f"CASE WHEN {col} IS NULL OR length({col}) = 0 THEN 0.0 ELSE "
+        f"CASE WHEN text IS NULL OR length(text) = 0 THEN 0.0 ELSE "
         f"list_sum(list_transform(list_sort(list_distinct({cs})), u -> "
-        f"-(CAST(len(list_filter({cs}, x -> x = u)) AS DOUBLE) / length({col})) "
-        f"* log2(CAST(len(list_filter({cs}, x -> x = u)) AS DOUBLE) / length({col}))"
+        f"-(CAST(len(list_filter({cs}, x -> x = u)) AS DOUBLE) / length(text)) "
+        f"* log2(CAST(len(list_filter({cs}, x -> x = u)) AS DOUBLE) / length(text))"
         f")) + 0.0 END"
     )

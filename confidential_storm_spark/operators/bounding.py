@@ -27,64 +27,42 @@ from pyspark.sql import functions as F
 __all__ = ["clamp_values", "bound_contributions", "bounded_clamped"]
 
 
-def clamp_values(df: DataFrame, value_col: str = "value", clamp: float = 1.0) -> DataFrame:
-    """P2: clamp ``value_col`` to [-clamp, +clamp] (ref
+def clamp_values(df: DataFrame, clamp: float = 1.0) -> DataFrame:
+    """P2: clamp ``value`` to [-clamp, +clamp] (ref
     BaselineContributionBoundingBolt.java:56)."""
-    c = F.col(value_col)
+    c = F.col("value")
     return df.withColumn(
-        value_col, F.least(F.greatest(c, F.lit(-clamp)), F.lit(float(clamp)))
+        "value", F.least(F.greatest(c, F.lit(-clamp)), F.lit(float(clamp)))
     )
 
 
-def bound_contributions(
-    df: DataFrame,
-    max_contributions: int,
-    user_col: str = "user_id",
-    order_cols: tuple[str, ...] = ("event_time", "seq"),
-) -> DataFrame:
-    """A2 (batch): admit each user's first C rows by arrival order;
-    NULL users always pass (event-level privacy)."""
-    w = Window.partitionBy(user_col).orderBy(*[F.col(c) for c in order_cols])
+def bound_contributions(df: DataFrame, max_contributions: int) -> DataFrame:
+    """A2 (batch): admit each ``user_id``'s first C rows by arrival
+    order ``(event_time, seq)``; NULL users always pass (event-level
+    privacy)."""
+    w = Window.partitionBy("user_id").orderBy(F.col("event_time"), F.col("seq"))
     return (
         df.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col(user_col).isNull() | (F.col("_rn") <= max_contributions))
+        .filter(F.col("user_id").isNull() | (F.col("_rn") <= max_contributions))
         .drop("_rn")
     )
 
 
 def bounded_clamped(
-    df: DataFrame,
-    max_contributions: int,
-    per_record_clamp: float,
-    user_col: str = "user_id",
-    value_col: str = "value",
-    order_cols: tuple[str, ...] = ("event_time", "seq"),
+    df: DataFrame, max_contributions: int, per_record_clamp: float
 ) -> DataFrame:
     """The bounding stage of the DP pipeline: clamp then C-bound."""
-    return bound_contributions(
-        clamp_values(df, value_col, per_record_clamp),
-        max_contributions,
-        user_col,
-        order_cols,
-    )
+    return bound_contributions(clamp_values(df, per_record_clamp), max_contributions)
 
 
-def bounded_sql(
-    inner_sql: str,
-    max_contributions: int,
-    per_record_clamp: float,
-    user_col: str = "user_id",
-    order_cols: tuple[str, ...] = ("event_time", "seq"),
-    value_col: str = "value",
-) -> str:
+def bounded_sql(inner_sql: str, max_contributions: int, per_record_clamp: float) -> str:
     """ANSI-SQL equivalent of :func:`bounded_clamped` for the DuckDB
     oracle, applied over ``inner_sql`` as a subquery."""
-    order = ", ".join(order_cols)
     return f"""
 SELECT * EXCLUDE (_rn) FROM (
     SELECT
-        * REPLACE (LEAST(GREATEST({value_col}, -{per_record_clamp}), {per_record_clamp}) AS {value_col}),
-        ROW_NUMBER() OVER (PARTITION BY {user_col} ORDER BY {order}) AS _rn
+        * REPLACE (LEAST(GREATEST(value, -{per_record_clamp}), {per_record_clamp}) AS value),
+        ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY event_time, seq) AS _rn
     FROM ({inner_sql})
-) WHERE {user_col} IS NULL OR _rn <= {max_contributions}
+) WHERE user_id IS NULL OR _rn <= {max_contributions}
 """

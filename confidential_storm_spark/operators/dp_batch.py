@@ -41,14 +41,11 @@ __all__ = ["DPParams", "dp_histogram_batch"]
 def dp_histogram_batch(
     contribs: DataFrame,
     params: DPParams,
-    key_col: str = "key",
-    user_col: str = "user_id",
-    value_col: str = "value",
-    epoch_col: str = "epoch",
     num_buckets: int = 64,
 ) -> DataFrame:
-    """Run the full DP-SQLP mechanism over an epoch-partitioned batch;
-    returns the final released histogram ``(key, count)`` sorted desc.
+    """Run the full DP-SQLP mechanism over an epoch-partitioned batch of
+    ``key``, ``user_id``, ``value``, ``epoch`` contributions; returns
+    the final released histogram ``(key, count)`` sorted desc.
 
     Input must already be clamped + C-bounded (use
     ``operators.bounding.bounded_clamped``), matching the reference
@@ -63,9 +60,9 @@ def dp_histogram_batch(
     # The (key, user) grouping needs no exchange when the input is
     # already partitioned by user (the bounding window's layout).
     evs = F.array_sort(
-        F.collect_list(F.struct(F.col(epoch_col).alias("e"), F.col(value_col).alias("v")))
+        F.collect_list(F.struct(F.col("epoch").alias("e"), F.col("value").alias("v")))
     )
-    per_user = contribs.groupBy(key_col, user_col).agg(evs.alias("_evs"))
+    per_user = contribs.groupBy("key", "user_id").agg(evs.alias("_evs"))
     # per event: carry value; stamp prev = previous DISTINCT epoch on the
     # FIRST row of each epoch (-1 = first ever, null = repeat row)
     prev_e = lambda i: F.get(F.col("_evs"), i - 1)["e"]  # noqa: E731
@@ -81,23 +78,23 @@ def dp_histogram_batch(
             .alias("prev"),
         ),
     )
-    rows = per_user.select(F.col(key_col), F.explode(trip).alias("t")).select(
-        key_col, F.col("t.epoch").alias(epoch_col), "t.value", "t.prev"
+    rows = per_user.select(F.col("key"), F.explode(trip).alias("t")).select(
+        "key", F.col("t.epoch").alias("epoch"), "t.value", "t.prev"
     )
     # count(prev) skips nulls, so repeat rows add value but no user;
     # the null-prev group still carries its value share into the total
-    part = rows.groupBy(key_col, epoch_col, "prev").agg(
+    part = rows.groupBy("key", "epoch", "prev").agg(
         F.sum("value").alias("v"), F.count("prev").alias("n_users")
     )
     windowed = (
-        part.groupBy(key_col, epoch_col)
+        part.groupBy("key", "epoch")
         .agg(
             F.sum("v").alias("total"),
             F.collect_list(  # when() -> null for the repeat-row group; collect_list drops nulls
                 F.when(F.col("prev").isNotNull(), F.struct("prev", "n_users"))
             ).alias("new_user_counts"),
         )
-        .withColumn("bucket", F.crc32(F.col(key_col).cast("string")) % num_buckets)
+        .withColumn("bucket", F.crc32(F.col("key").cast("string")) % num_buckets)
     )
 
     p = params.for_release()
@@ -108,7 +105,7 @@ def dp_histogram_batch(
         mech = p.mechanism(int(pdf["bucket"].iloc[0]))
         by_epoch: dict[int, list[tuple[str, float, list]]] = {}
         for key, epoch, total, pc in zip(
-            pdf[key_col], pdf[epoch_col], pdf["total"], pdf["new_user_counts"]
+            pdf["key"], pdf["epoch"], pdf["total"], pdf["new_user_counts"]
         ):
             by_epoch.setdefault(int(epoch), []).append((key, float(total), pc))
         hist: dict[str, int] = {}

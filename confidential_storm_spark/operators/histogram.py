@@ -20,78 +20,66 @@ __all__ = [
 ]
 
 
-def keyed_sum(df: DataFrame, key_col: str = "key", value_col: str = "value") -> DataFrame:
-    """A1: per-key SUM of (clamped) contributions."""
-    return df.groupBy(key_col).agg(F.sum(value_col).alias("total"))
+def keyed_sum(df: DataFrame) -> DataFrame:
+    """A1: per-``key`` SUM of (clamped) contribution ``value``."""
+    return df.groupBy("key").agg(F.sum("value").alias("total"))
 
 
-def histogram_release(
-    df: DataFrame, key_col: str = "key", value_col: str = "value"
-) -> DataFrame:
-    """A13 + O1: round half-up, clamp negatives to zero, sort desc
-    (ref StreamingDPMechanism.produceHistogram:517-531).
+def histogram_release(df: DataFrame) -> DataFrame:
+    """A13 + O1: per ``key``, the SUM of ``value`` rounded half-up,
+    negatives clamped to zero, sorted desc (ref
+    StreamingDPMechanism.produceHistogram:517-531).
 
     ``floor(x + 0.5)`` matches Java ``Math.round`` (Spark/DuckDB
     ``round`` use HALF_UP for positives but differ on negative .5)."""
     return (
-        df.groupBy(key_col)
+        df.groupBy("key")
         .agg(
             F.greatest(
-                F.floor(F.sum(value_col) + F.lit(0.5)).cast("long"), F.lit(0).cast("long")
+                F.floor(F.sum("value") + F.lit(0.5)).cast("long"), F.lit(0).cast("long")
             ).alias("count")
         )
-        .orderBy(F.desc("count"), key_col)
+        .orderBy(F.desc("count"), "key")
     )
 
 
-def merge_partials(
-    partials: DataFrame,
-    key_col: str = "key",
-    value_col: str = "partial_sum",
-    epoch_col: str = "epoch",
-    producer_col: str = "producer_id",
-    dummy_col: str | None = "is_dummy",
-) -> DataFrame:
-    """A14 + T6: merge per-replica partial histograms — discard
-    dummies, dedup (epoch, producer), then fan-in SUM per key.
+def merge_partials(partials: DataFrame) -> DataFrame:
+    """A14 + T6: merge per-replica ``partial_sum`` histograms — discard
+    ``is_dummy`` rows, dedup (``epoch``, ``producer_id``), then fan-in
+    SUM per ``key``.
 
     The reference tracks per-epoch completion with a TreeMap of <=8
     pending epochs (ref :41,152-161); in batch Spark epochs are
     complete by construction, so the merge is the dedup + re-aggregate.
     """
     df = partials
-    if dummy_col is not None and dummy_col in df.columns:
-        df = df.filter(~F.col(dummy_col))
+    if "is_dummy" in df.columns:
+        df = df.filter(~F.col("is_dummy"))
     # one partial per (epoch, producer): drop exact duplicate deliveries
-    df = df.dropDuplicates([epoch_col, producer_col, key_col])
-    return df.groupBy(key_col).agg(F.sum(value_col).alias("total"))
+    df = df.dropDuplicates(["epoch", "producer_id", "key"])
+    return df.groupBy("key").agg(F.sum("partial_sum").alias("total"))
 
 
-def ground_truth(df: DataFrame, key_col: str = "key", value_col: str = "value") -> DataFrame:
-    """A15: exact (non-DP, non-bounded) histogram."""
-    return df.groupBy(key_col).agg(F.sum(value_col).alias("gt_total"))
+def ground_truth(df: DataFrame) -> DataFrame:
+    """A15: exact (non-DP, non-bounded) per-``key`` histogram of ``value``."""
+    return df.groupBy("key").agg(F.sum("value").alias("gt_total"))
 
 
-def utility_metrics(
-    dp: DataFrame,
-    gt: DataFrame,
-    key_col: str = "key",
-    dp_col: str = "count",
-    gt_col: str = "gt_total",
-) -> DataFrame:
-    """A16: L0/Linf/L1/L2 error of a DP histogram vs ground truth over
-    the full outer join of the two key sets (ref
+def utility_metrics(dp: DataFrame, gt: DataFrame) -> DataFrame:
+    """A16: L0/Linf/L1/L2 error of a DP histogram ``(key, count)`` vs
+    ground truth ``(key, gt_total)`` over the full outer join of the
+    two key sets (ref
     BaselineHistogramAggregationBolt.writeReport:247-266).
 
     The small DP side could be broadcast, but both sides are
     aggregates of the same scan, so a shuffled full-outer on the agg
     key is already minimal.
     """
-    joined = dp.select(key_col, dp_col).join(
-        gt.select(key_col, gt_col), on=key_col, how="full_outer"
+    joined = dp.select("key", "count").join(
+        gt.select("key", "gt_total"), on="key", how="full_outer"
     )
-    d = F.coalesce(F.col(dp_col).cast("double"), F.lit(0.0))
-    g = F.coalesce(F.col(gt_col).cast("double"), F.lit(0.0))
+    d = F.coalesce(F.col("count").cast("double"), F.lit(0.0))
+    g = F.coalesce(F.col("gt_total").cast("double"), F.lit(0.0))
     err = d - g
     return joined.agg(
         F.count(F.when(d > 0, 1)).alias("l0"),

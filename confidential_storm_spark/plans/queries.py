@@ -542,8 +542,7 @@ SELECT producer_id, seq FROM m WHERE seq > mx - 128 ORDER BY producer_id, seq
 def sec_seq_stamp(spark: SparkSession, sf_dir: str) -> DataFrame:
     contrib = contributions_view(spark, sf_dir)
     return stamp_sequence(
-        contrib.select("producer_id", "event_time", "event_id"),
-        order_cols=("event_time", "event_id"),
+        contrib.select("producer_id", "event_time", "event_id")
     ).select("producer_id", "event_id", "seq_out")
 
 
@@ -986,7 +985,7 @@ def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 FINGERPRINT_SQL = f"""
-SELECT doc_id, {fingerprint_sql("text")} AS fp FROM documents ORDER BY doc_id
+SELECT doc_id, {fingerprint_sql()} AS fp FROM documents ORDER BY doc_id
 """
 
 
@@ -1031,7 +1030,7 @@ def _text_winnow_sql() -> str:
     from ..functions.text import winnow_from_grams_sql, winnow_grams_sql
 
     return f"""
-WITH g AS (SELECT doc_id, {winnow_grams_sql("text")} AS grams FROM documents)
+WITH g AS (SELECT doc_id, {winnow_grams_sql()} AS grams FROM documents)
 SELECT doc_id, unnest({winnow_from_grams_sql("grams")}) AS fp
 FROM g ORDER BY doc_id, fp
 """
@@ -1223,7 +1222,7 @@ def dedup_normalized(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _dedup_normalized_sql() -> str:
     from ..functions.text import clean_text_sql, nfc_lower_sql
 
-    k = nfc_lower_sql(clean_text_sql("text"))
+    k = nfc_lower_sql(clean_text_sql())
     return f"""
 SELECT md5({k}) AS digest, MIN(doc_id) AS survivor_id, COUNT(*) AS n_copies
 FROM documents GROUP BY md5({k}) ORDER BY digest
@@ -3237,7 +3236,7 @@ def text_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _text_clean_sql() -> str:
     from ..functions.text import clean_text_sql
 
-    c = clean_text_sql("text")
+    c = clean_text_sql()
     return f"""
 SELECT doc_id, length({c}) AS clean_len,
        length(text) - length({c}) AS removed_chars
@@ -5586,7 +5585,7 @@ def stream_dedup_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         originals.unionByName(copies),
         "epoch",
-        lambda s: dedup_stream(s, "text"),
+        lambda s: dedup_stream(s),
         output_mode="append",
     )
     return out.select(
@@ -5633,7 +5632,6 @@ def stream_hll_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             "user_id",
             ["event_type"],
             window="3 days",
-            ts_col="ts",
             watermark_delay="40 days",
         ),
         output_mode="append",
@@ -6541,7 +6539,6 @@ def stream_quantiles_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             "value",
             qs=SQ_QS,
             window="3 days",
-            ts_col="ts",
             watermark_delay="40 days",
         ),
         output_mode="append",
@@ -6622,7 +6619,6 @@ def stream_kl_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the executors; only the 64 (bin, count) rows are collected
     ref = hashed_ref_probs_spark(
         docs.where(F.col("doc_id") % _KL_REF_MOD == 0),
-        "text",
         n_bins=_KL_BINS,
         alpha=_KL_ALPHA,
     )
@@ -6652,7 +6648,6 @@ def stream_kl_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             ref,
             alpha=_KL_ALPHA,
             window="2 days",
-            ts_col="ts",
             watermark_delay="40 days",
         ),
         output_mode="append",
@@ -7071,9 +7066,7 @@ def stream_trending_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         docs.unionByName(sent),
         "epoch",
-        lambda s: windowed_wordcounts_stream(
-            s, window="2 days", watermark="1 hour", ts_col="ts", text_col="text"
-        ),
+        lambda s: windowed_wordcounts_stream(s, window="2 days"),
         output_mode="append",
     )
     return top_k_per_window(counts, k=_TRENDING_K).select(
@@ -7670,7 +7663,7 @@ def _char_entropy_sql() -> str:
 
     # single evaluation of the quadratic list-algebra expression; the
     # value and the flag derive from one subquery column
-    e = char_entropy_sql("text")
+    e = char_entropy_sql()
     return (
         f"SELECT doc_id, ROUND(e, 4) AS char_entropy, "
         f"e < {CHAR_ENTROPY_LOW!r} AS is_low_entropy "
@@ -8873,8 +8866,9 @@ def q_order_backlog(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: the placed side is the canonical fact-fact equi-join
     (lineitem × orders on orderkey — hash-distributed, skew-free per
-    `q_skew_profile`, and exchange-free under the bucketed layout
-    `tools/bucketed_join_ab.py` measures); both sides then collapse
+    `q_skew_profile`, and exchange-free under the bucketed layout that
+    `benchmark/bucketed_join_ab.csv` measures, written by the since
+    deleted `tools/bucketed_join_ab.py`); both sides then collapse
     to ~|months| rows BEFORE the full-outer alignment and running
     sums, so the window work is constant-size at any SF."""
     li = load_table(spark, sf_dir, "lineitem")
@@ -9727,7 +9721,7 @@ def _winnow_pairs_sql() -> str:
     from ..functions.text import winnow_from_grams_sql, winnow_grams_sql
 
     return f"""
-WITH g AS (SELECT doc_id, {winnow_grams_sql("text")} AS grams FROM documents),
+WITH g AS (SELECT doc_id, {winnow_grams_sql()} AS grams FROM documents),
 posts AS (
   SELECT DISTINCT doc_id, unnest({winnow_from_grams_sql("grams")}) AS fp FROM g
 ),
@@ -10506,7 +10500,7 @@ def stream_reservoir_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         docs,
         "epoch",
-        lambda st: reservoir_kmin_stream(st, "source", "doc_id", k=_RESERVOIR_K),
+        lambda st: reservoir_kmin_stream(st, k=_RESERVOIR_K),
         output_mode="update",
         latest_per=["key", "rank"],
     )

@@ -35,13 +35,12 @@ def run_wordcount_two_stage(
     stage_dir: str,
     checkpoint_dir: str,
     params: DPParams | None = None,
-    text_col: str = "text",
-    user_col: str = "user_id",
     max_contributions: int = 100,
     num_buckets: int = 4,
     sink=None,
 ):
-    """Run the topology as TWO chained streaming queries staged through
+    """Run the topology over the ``user_id`` and ``text`` columns of
+    ``documents`` as TWO chained streaming queries staged through
     parquet: Spark does not allow two ``applyInPandasWithState``
     operators (per-user bounding, then per-key DP) inside one query,
     exactly as the reference runs them in separate bolts connected by
@@ -65,10 +64,10 @@ def run_wordcount_two_stage(
         )
     spark = documents.sparkSession
     word_rows = documents.select(
-        F.col(user_col).cast("string").alias("user_id"),
-        F.explode(words(F.col(text_col))).alias("key"),
+        F.col("user_id").cast("string").alias("user_id"),
+        F.explode(words(F.col("text"))).alias("key"),
     ).withColumn("value", F.lit(1.0))
-    bounded = bound_contributions_stream(word_rows, max_contributions, user_col="user_id")
+    bounded = bound_contributions_stream(word_rows, max_contributions)
     run_available_now(
         bounded.writeStream.outputMode("append").foreachBatch(
             lambda df, batch_id: write_handoff(df, stage_dir, batch_id)

@@ -1,5 +1,5 @@
 """Table loaders and synthetic generators (SURVEY §2.1 sources)."""
 
-from .tables import TABLES, load_table, load_tables, register_views, contributions_view
+from .tables import TABLES, load_table, contributions_view
 
-__all__ = ["TABLES", "load_table", "load_tables", "register_views", "contributions_view"]
+__all__ = ["TABLES", "load_table", "contributions_view"]

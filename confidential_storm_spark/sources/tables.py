@@ -65,12 +65,13 @@ NUM_PRODUCERS = 4
 _SPREAD_TABLES = {"documents"}
 
 
-# Session-scoped memo of RESOLVED table plans: (applicationId, sf_dir,
-# name, file size, file mtime) -> DataFrame.  ``spark.read.parquet``
-# costs ~75-100 ms of driver work per call (data-source resolution,
-# file index, footer/schema read), and the registry's ~300 loads per
-# bench pass made that ~25-30 s of pure fixed cost — a warehouse
-# resolves a table through its catalog once, not per query.  This
+# Session-scoped memo of RESOLVED single-file table plans:
+# (applicationId, sf_dir, name, file size, file mtime) -> DataFrame.
+# ``spark.read.parquet`` costs ~75-100 ms of driver work per call
+# (data-source resolution, file index, footer/schema read), and the
+# registry's ~300 loads per bench pass made that ~25-30 s of pure
+# fixed cost — a warehouse resolves a table through its catalog once,
+# not per query.  This
 # memoizes the UNRESOLVED-plan DataFrame only: every action still
 # computes from the parquet files (no data or result is cached), and
 # the size+mtime key invalidates the entry the moment anything
@@ -83,16 +84,17 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     import os as _os
 
     path_ = f"{sf_dir}/{name}.parquet"
-    try:
-        st = _os.stat(path_)
-        sig: tuple = (st.st_size, st.st_mtime_ns)
-    except OSError:
-        sig = ()
+    if not _os.path.isfile(path_):
+        # a directory table: a file added inside a partition directory
+        # changes neither the size nor the mtime of the top directory,
+        # so no stat key can tell that the memoized file listing is stale
+        return _load_table_uncached(spark, sf_dir, name)
+    st = _os.stat(path_)
     app_id = getattr(spark, "_css_app_id", None)
     if app_id is None:
         app_id = spark.sparkContext.applicationId
         spark._css_app_id = app_id
-    key = (app_id, sf_dir, name, sig)
+    key = (app_id, sf_dir, name, st.st_size, st.st_mtime_ns)
     hit = _TABLE_MEMO.get(key)
     if hit is not None:
         return hit
@@ -172,15 +174,6 @@ def ts_to_micros(df: DataFrame, ts_col: str = "ts") -> Column:
     if isinstance(dt, TimestampType):
         return F.unix_micros(F.col(ts_col))
     raise TypeError(f"{ts_col}: unsupported timestamp dtype {dt.simpleString()}")
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    for name in TABLES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)
 
 
 def contributions_view(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -46,6 +46,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
+from pyspark.sql.types import StructType
 
 _SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
 
@@ -96,7 +97,7 @@ def write_handoff(df: DataFrame, path: str, batch_id: int) -> None:
         df.repartition(1).write.mode("overwrite").parquet(out)
 
 
-def read_handoff(spark: SparkSession, path: str, schema: str) -> DataFrame:
+def read_handoff(spark: SparkSession, path: str, schema: StructType | str) -> DataFrame:
     """File-source stream over a handoff written by
     :func:`write_handoff`, one file (one upstream batch) per
     trigger."""

@@ -26,17 +26,11 @@ from .stateful import dedup_stream
 __all__ = ["quality_predicate", "curation_filter_stream"]
 
 
-def quality_predicate(
-    text: Column,
-    min_tokens: int = FUNNEL_DEFAULTS["min_tokens"],
-    min_alpha_ratio: float = FUNNEL_DEFAULTS["min_alpha_ratio"],
-    max_dup_word_frac: float = FUNNEL_DEFAULTS["max_dup_word_frac"],
-    min_chars: int = FUNNEL_DEFAULTS["min_chars"],
-) -> Column:
+def quality_predicate(text: Column) -> Column:
     """The funnel's quality/repetition/length stages as ONE boolean
-    expression: token count, alpha ratio, per-doc duplicated-word
-    fraction, char length.  Pure per-row arithmetic — streamable,
-    codegen-fused, no joins."""
+    expression at the funnel's default thresholds: token count, alpha
+    ratio, per-doc duplicated-word fraction, char length.  Pure per-row
+    arithmetic — streamable, codegen-fused, no joins."""
     ws = words(text)
     n_tokens = F.size(ws)
     n_chars = F.length(text)
@@ -46,26 +40,16 @@ def quality_predicate(
         1.0 - F.size(F.array_distinct(ws)).cast("double") / n_tokens
     ).otherwise(F.lit(0.0))
     return (
-        (n_tokens >= min_tokens)
-        & (alpha_ratio >= min_alpha_ratio)
-        & (dup_word_frac <= max_dup_word_frac)
-        & (n_chars >= min_chars)
+        (n_tokens >= FUNNEL_DEFAULTS["min_tokens"])
+        & (alpha_ratio >= FUNNEL_DEFAULTS["min_alpha_ratio"])
+        & (dup_word_frac <= FUNNEL_DEFAULTS["max_dup_word_frac"])
+        & (n_chars >= FUNNEL_DEFAULTS["min_chars"])
     )
 
 
-def curation_filter_stream(
-    docs: DataFrame,
-    text_col: str = "text",
-    dedup: bool = True,
-    watermark: tuple[str, str] | None = None,
-    **thresholds,
-) -> DataFrame:
+def curation_filter_stream(docs: DataFrame) -> DataFrame:
     """Ingestion-time curation of a streaming document source: drop
-    rows failing :func:`quality_predicate`, then (optionally) drop
-    exact-content duplicates across the stream's lifetime (or within
-    a ``watermark`` horizon).  Survivor rows pass through with their
-    original schema."""
-    out = docs.filter(quality_predicate(F.col(text_col), **thresholds))
-    if dedup:
-        out = dedup_stream(out, text_col=text_col, watermark=watermark)
-    return out
+    rows whose ``text`` fails :func:`quality_predicate`, then drop
+    exact-content duplicates across the stream's lifetime.  Survivor
+    rows pass through with their original schema."""
+    return dedup_stream(docs.filter(quality_predicate(F.col("text"))))

@@ -36,7 +36,7 @@ window, effectively-once otherwise.  Duplicate vectors never corrupt
 serving (a duplicate id can only displace its own twin in a top-k);
 the periodic compaction step the lifecycle already runs
 (``sources.writers.compact_partitioned`` with
-``dedup_cols=(id_col,)``) drops the duplicates, restoring exactly-once
+``dedup_cols=("vec_id",)``) drops the duplicates, restoring exactly-once
 state.  A write-ahead ledger would invert the failure into silent
 data loss, which is strictly worse.
 """
@@ -83,13 +83,12 @@ def ann_ingest_stream(
     embeddings: DataFrame,
     index_path: str,
     checkpoint_dir: str,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     compressed: bool = False,
 ) -> StreamingQuery:
     """Append every micro-batch of ``embeddings`` (a streaming
-    DataFrame) to the standing index at ``index_path`` (built
-    beforehand with ``ivf_write_index`` / ``ivfpq_write_index``).
+    DataFrame of ``vec_id`` and ``embedding``) to the standing index at
+    ``index_path`` (built beforehand with ``ivf_write_index`` /
+    ``ivfpq_write_index``).
     ``compressed=True`` routes through :func:`pq.ivfpq_append` (codes
     from the existing codebooks); otherwise :func:`ivf_append`.
     Epochs already recorded (keyed by this checkpoint's query id) in
@@ -112,9 +111,9 @@ def ann_ingest_stream(
         if _epoch_committed(spark, ledger, qid, epoch_id):
             return
         if compressed:
-            ivfpq_append(batch, index_path, vec_col=vec_col, id_col=id_col)
+            ivfpq_append(batch, index_path)
         else:
-            ivf_append(batch, index_path, vec_col=vec_col, id_col=id_col)
+            ivf_append(batch, index_path)
         spark.createDataFrame(
             [(qid, int(epoch_id))], "query_id string, epoch_id long"
         ).coalesce(1).write.mode("append").parquet(ledger)

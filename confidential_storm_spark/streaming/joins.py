@@ -30,32 +30,27 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def enrich_stream(
-    stream: DataFrame, dim: DataFrame, on: str, how: str = "left"
-) -> DataFrame:
-    """Stream-static join: per micro-batch, ``dim`` is joined
+def enrich_stream(stream: DataFrame, dim: DataFrame, on: str) -> DataFrame:
+    """Stream-static left join: per micro-batch, ``dim`` is joined
     (broadcast when small) onto the stream.  The stream side never
     shuffles; state-free."""
-    return stream.join(F.broadcast(dim), on, how)
+    return stream.join(F.broadcast(dim), on, "left")
 
 
 def interval_join_streams(
     left: DataFrame,
     right: DataFrame,
     key: str,
-    left_ts: str = "ts",
-    right_ts: str = "ts",
     upper: str = "1 hour",
     watermark: str = "2 hours",
     how: str = "inner",
-    right_prefix: str = "r_",
 ) -> DataFrame:
     """Event-time interval join of two streams: each right row joins
-    left rows of the same ``key`` whose timestamp is in
-    ``[left_ts, left_ts + upper]`` — i.e. the right event happened AT
+    left rows of the same ``key`` whose ``ts`` is in
+    ``[ts, ts + upper]`` — i.e. the right event happened AT
     OR AFTER the left event, within the horizon.
 
-    Right columns are prefixed with ``right_prefix`` so both streams
+    Right columns are prefixed with ``r_`` so both streams
     may share a schema (the common case: two slices of one event
     stream).  Both sides get ``watermark``; with the two-sided time
     bound this caps join state at (watermark + upper) of buffered
@@ -67,17 +62,13 @@ def interval_join_streams(
     in batch), which is how the differential tests certify the
     streaming result against the batch interval join.
     """
-    r = right.select([F.col(c).alias(f"{right_prefix}{c}") for c in right.columns])
-    lw = left.withWatermark(left_ts, watermark) if left.isStreaming else left
-    rw = (
-        r.withWatermark(f"{right_prefix}{right_ts}", watermark)
-        if right.isStreaming
-        else r
-    )
-    rts = F.col(f"{right_prefix}{right_ts}")
+    r = right.select([F.col(c).alias(f"r_{c}") for c in right.columns])
+    lw = left.withWatermark("ts", watermark) if left.isStreaming else left
+    rw = r.withWatermark("r_ts", watermark) if right.isStreaming else r
+    rts = F.col("r_ts")
     cond = (
-        (F.col(key) == F.col(f"{right_prefix}{key}"))
-        & (rts >= F.col(left_ts))
-        & (rts <= F.col(left_ts) + F.expr(f"INTERVAL {upper}"))
+        (F.col(key) == F.col(f"r_{key}"))
+        & (rts >= F.col("ts"))
+        & (rts <= F.col("ts") + F.expr(f"INTERVAL {upper}"))
     )
     return lw.join(rw, cond, how)

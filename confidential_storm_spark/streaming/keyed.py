@@ -13,7 +13,8 @@ This module is the scale-safe replacement, SURVEY §1.3's own mapping
 ``applyInPandasWithState`` per query, and the epoch id must ride the
 data, so the stages hand off through one-file-per-epoch parquet —
 the same micro-batch==epoch file handoff the reference's ZK epoch
-barrier provides):
+barrier provides).  Every stage reads the canonical ``key``,
+``user_id`` and ``value`` contribution columns by name:
 
 1. :func:`stamp_epoch_stream` — ``foreachBatch`` stamps
    ``epoch = batch_id`` (processing-time mode, reference T3 parity); OR
@@ -113,6 +114,7 @@ from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..dp.mechanism import DPParams
+from ..sources.tables import EPOCH_ORIGIN
 from ._drain import read_handoff, run_available_now, write_handoff
 
 __all__ = [
@@ -157,17 +159,13 @@ def stamp_event_time_epoch_stream(
     events: DataFrame,
     path: str,
     checkpoint: str,
-    ts_col: str = "event_time",
-    key_col: str = "key",
-    user_col: str = "user_id",
-    value_col: str = "value",
     window: str = "1 day",
     delay: str = "1 day",
-    origin: str = "2024-01-01",
 ):
-    """Stage 1, EVENT-TIME mode: epochs derive from the data
-    (``epoch = floor((window_start - origin) / window)``), matching
-    the batch path's day-since-origin derivation
+    """Stage 1, EVENT-TIME mode: epochs derive from the ``event_time``
+    column of the canonical ``key``, ``user_id``, ``value`` contribution
+    stream (``epoch = floor((window_start - EPOCH_ORIGIN) / window)``),
+    matching the batch path's day-since-origin derivation
     (sources/tables.py::contributions_view) instead of the
     processing-time ``epoch = batch_id`` stamp — streaming and batch
     agree on data-derived epochs (SURVEY §7's intentional semantic
@@ -188,7 +186,7 @@ def stamp_event_time_epoch_stream(
     past ``window_end + delay`` — advances it.  A continuous
     production stream does this for free.
 
-    Windows that start a whole ``window`` or more before ``origin``
+    Windows that start a whole ``window`` or more before ``EPOCH_ORIGIN``
     (negative epochs) are dropped.
 
     Hands off one parquet file per micro-batch
@@ -197,19 +195,19 @@ def stamp_event_time_epoch_stream(
     import datetime as dt
 
     origin_us = int(
-        dt.datetime.strptime(origin, "%Y-%m-%d")
+        dt.datetime.strptime(EPOCH_ORIGIN, "%Y-%m-%d")
         .replace(tzinfo=dt.timezone.utc)
         .timestamp()
         * 1_000_000
     )
     start = F.unix_micros(F.col("window.start"))
     stamped = (
-        events.withWatermark(ts_col, delay)
-        .groupBy(F.window(F.col(ts_col), window), F.col(key_col), F.col(user_col))
-        .agg(F.sum(value_col).alias("_total"))
+        events.withWatermark("event_time", delay)
+        .groupBy(F.window(F.col("event_time"), window), F.col("key"), F.col("user_id"))
+        .agg(F.sum("value").alias("_total"))
         .select(
-            F.col(key_col).cast("string").alias("key"),
-            F.col(user_col).cast("string").alias("user_id"),
+            F.col("key").cast("string").alias("key"),
+            F.col("user_id").cast("string").alias("user_id"),
             F.col("_total").cast("double").alias("value"),
             ((start - F.lit(origin_us)) / (F.unix_micros(F.col("window.end")) - start))
             .cast("int")
@@ -233,14 +231,9 @@ def stamp_event_time_epoch_stream(
 # ---------------------------------------------------------------------------
 
 
-def prev_epoch_counts_stream(
-    stamped: DataFrame,
-    key_col: str = "key",
-    user_col: str = "user_id",
-    value_col: str = "value",
-    epoch_col: str = "epoch",
-) -> DataFrame:
-    """Stage 2: for every (key, user) pair contributing in an epoch,
+def prev_epoch_counts_stream(stamped: DataFrame) -> DataFrame:
+    """Stage 2: over the stamped ``key``, ``user_id``, ``value``,
+    ``epoch`` handoff, for every (key, user) pair contributing in an epoch,
     emit ``(key, epoch, total, prev_epoch)`` where ``prev_epoch`` is
     the user's previous contribution epoch for that key (``-1`` for
     first-ever) — then FORGET the user id: downstream state never sees
@@ -261,7 +254,7 @@ def prev_epoch_counts_stream(
             return
         pdf = pd.concat(chunks, ignore_index=True)
         last = state.get[0] if state.exists else {}
-        totals = pdf.groupby(["_k", epoch_col], sort=True)[value_col].sum()
+        totals = pdf.groupby(["_k", "epoch"], sort=True)["value"].sum()
         keys, epochs = (totals.index.get_level_values(i).tolist() for i in (0, 1))
         prev = []
         for k, epoch in zip(keys, epochs):
@@ -273,12 +266,12 @@ def prev_epoch_counts_stream(
         )
 
     return (
-        stamped.filter(F.col(key_col).isNotNull())
+        stamped.filter(F.col("key").isNotNull())
         .select(
-            F.col(key_col).cast("string").alias("_k"),
-            F.col(user_col).cast("string").alias("_u"),
-            F.col(value_col).cast("double").alias(value_col),
-            F.col(epoch_col).cast("int").alias(epoch_col),
+            F.col("key").cast("string").alias("_k"),
+            F.col("user_id").cast("string").alias("_u"),
+            F.col("value").cast("double").alias("value"),
+            F.col("epoch").cast("int").alias("epoch"),
         )
         .groupBy("_u")
         .applyInPandasWithState(
@@ -382,14 +375,9 @@ def run_keyed_dp_available_now(
     params: DPParams,
     workdir: str,
     schema: str,
-    key_col: str = "key",
-    user_col: str = "user_id",
-    value_col: str = "value",
     epoch_mode: str = "processing",
-    ts_col: str = "event_time",
     window: str = "1 day",
     delay: str = "1 day",
-    origin: str = "2024-01-01",
 ) -> dict:
     """Drain the 3-stage keyed DP pipeline over all available input
     (one ``availableNow`` pass per stage, in order — in production the
@@ -401,9 +389,12 @@ def run_keyed_dp_available_now(
     that fails, or is still running after its wait, raises before the
     next stage reads its handoff.
 
+    ``events`` (declared by the DDL ``schema``) carries the canonical
+    ``key``, ``user_id`` and ``value`` columns, and every stage reads
+    them by those names.
     ``epoch_mode='processing'`` stamps ``epoch = batch_id`` (reference
     T3 parity: wall-clock ticks); ``epoch_mode='event_time'`` derives
-    epochs from ``ts_col`` tumbling windows with a ``delay`` watermark
+    epochs from ``event_time`` tumbling windows with a ``delay`` watermark
     (late rows DROPPED by the engine), so streaming output epochs
     match the batch path's data-derived epochs.
 
@@ -417,25 +408,15 @@ def run_keyed_dp_available_now(
 
     if epoch_mode == "event_time":
         stamp_event_time_epoch_stream(
-            events,
-            stamped_path,
-            f"{workdir}/ckpt_stamp",
-            ts_col,
-            key_col,
-            user_col,
-            value_col,
-            window,
-            delay,
-            origin,
+            events, stamped_path, f"{workdir}/ckpt_stamp", window, delay
         )
-        stamped = read_handoff(spark, stamped_path, EVENT_STAMPED_SCHEMA)
-        prev = prev_epoch_counts_stream(stamped)
+        stamped_schema = EVENT_STAMPED_SCHEMA
     elif epoch_mode == "processing":
         stamp_epoch_stream(events, stamped_path, f"{workdir}/ckpt_stamp")
-        stamped = read_handoff(spark, stamped_path, f"{schema}, epoch int")
-        prev = prev_epoch_counts_stream(stamped, key_col, user_col, value_col)
+        stamped_schema = f"{schema}, epoch int"
     else:
         raise ValueError(f"unknown epoch_mode {epoch_mode!r}")
+    prev = prev_epoch_counts_stream(read_handoff(spark, stamped_path, stamped_schema))
 
     q2 = run_available_now(
         prev.writeStream.foreachBatch(

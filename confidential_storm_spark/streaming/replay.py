@@ -34,6 +34,7 @@ import uuid
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from ._drain import read_handoff, run_available_now
 
@@ -42,13 +43,13 @@ __all__ = ["write_epoch_source", "replay_available_now"]
 
 def write_epoch_source(
     df: DataFrame, epoch_col: str, out_dir: str
-) -> tuple[str, int]:
+) -> tuple[StructType, int]:
     """Materialize ``df`` as one parquet FILE per distinct value of
     ``epoch_col`` (ascending), named ``epoch=NNNN.parquet`` with
     strictly increasing mtimes, so ``_drain.read_handoff`` over
-    ``out_dir`` (one file per trigger) replays the epochs in order.  Returns the DDL schema string for ``readStream.schema``
-    and the total row count (the replay sizes its state partitioning
-    from it)."""
+    ``out_dir`` (one file per trigger) replays the epochs in order.
+    Returns the schema for ``readStream.schema`` and the total row
+    count (the replay sizes its state partitioning from it)."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -68,8 +69,7 @@ def write_epoch_source(
             allow_truncated_timestamps=True,
         )
         os.utime(path, (base + 10 * i, base + 10 * i))
-    ddl = ", ".join(f.name + " " + f.dataType.simpleString() for f in df.schema.fields)
-    return ddl, len(pdf)
+    return df.schema, len(pdf)
 
 
 def replay_available_now(
@@ -78,7 +78,7 @@ def replay_available_now(
     epoch_col: str,
     transform,
     output_mode: str = "append",
-    output_schema: str | None = None,
+    output_schema: StructType | str | None = None,
     latest_per: list[str] | None = None,
     shuffle_partitions: int | None = None,
 ) -> DataFrame:
@@ -141,7 +141,7 @@ def replay_available_now(
     prev_nodata = spark.conf.get(_NODATA_KEY, "true")
     try:
         src = os.path.join(work, "src")
-        ddl, n_rows = write_epoch_source(input_df, epoch_col, src)
+        schema, n_rows = write_epoch_source(input_df, epoch_col, src)
         if shuffle_partitions is None:
             # 50k rows per state partition: each partition pays a
             # state-store load+commit per micro-batch, and the matched
@@ -160,11 +160,9 @@ def replay_available_now(
         # removes one full batch of planning + state commits per
         # replay; all 15 replay hashes verified identical at sf0.1.
         spark.conf.set(_NODATA_KEY, "false")
-        out = transform(read_handoff(spark, src, ddl))
+        out = transform(read_handoff(spark, src, schema))
         if output_schema is None:
-            output_schema = ", ".join(
-                f.name + " " + f.dataType.simpleString() for f in out.schema.fields
-            )
+            output_schema = out.schema
         batches: list[tuple[int, pd.DataFrame]] = []
 
         def sink(bdf: DataFrame, bid: int) -> None:

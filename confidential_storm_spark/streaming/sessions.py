@@ -37,22 +37,20 @@ def session_stats_stream(
     events: DataFrame,
     gap: str = "30 minutes",
     watermark_delay: str = "10 minutes",
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
 ) -> DataFrame:
-    """Per-user session aggregates on a live stream:
-    ``(user_id, session_start, session_end, n_events, sum_value)``,
-    one appended row per CLOSED session (watermark-finalized)."""
+    """Per-user session aggregates on a live ``(user_id, ts, value)``
+    stream: ``(user_id, session_start, session_end, n_events,
+    sum_value)``, one appended row per CLOSED session
+    (watermark-finalized)."""
     return (
-        events.withWatermark(ts_col, watermark_delay)
-        .groupBy(F.session_window(F.col(ts_col), gap), F.col(user_col))
+        events.withWatermark("ts", watermark_delay)
+        .groupBy(F.session_window(F.col("ts"), gap), F.col("user_id"))
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum(value_col), 6).alias("sum_value"),
+            F.round(F.sum("value"), 6).alias("sum_value"),
         )
         .select(
-            user_col,
+            "user_id",
             F.col("session_window.start").alias("session_start"),
             F.col("session_window.end").alias("session_end"),
             "n_events",

@@ -22,7 +22,7 @@ __all__ = [
 ]
 
 
-def histogram_file_sink(out_dir: str, key_col: str = "key", count_col: str = "count"):
+def histogram_file_sink(out_dir: str):
     """K1: per release tick, rewrite ``histogram.txt`` with ``key:count``
     lines sorted desc + a timestamp header
     (HistogramAggregatorBolt.java:55-99).
@@ -41,7 +41,7 @@ def histogram_file_sink(out_dir: str, key_col: str = "key", count_col: str = "co
         if rows and "epoch" in df.columns:
             rows = sorted(rows, key=lambda r: r["epoch"])
         for r in rows:
-            state[r[key_col]] = r[count_col]
+            state[r["key"]] = r["count"]
         os.makedirs(out_dir, exist_ok=True)
         path = os.path.join(out_dir, "histogram.txt")
         with open(path, "w") as f:
@@ -52,19 +52,14 @@ def histogram_file_sink(out_dir: str, key_col: str = "key", count_col: str = "co
     return write
 
 
-def utility_report_sink(
-    csv_path: str,
-    ground_truth: dict[str, float],
-    key_col: str = "key",
-    count_col: str = "count",
-):
-    """K2: per release tick append
+def utility_report_sink(csv_path: str, ground_truth: dict[str, float]):
+    """K2: per release tick, from the ``key`` and ``count`` rows, append
     ``tick,ts,l0,l_inf,l1,l2,dp_keys,gt_keys``
     (BaselineHistogramAggregationBolt.java:247-289)."""
     header = "tick,ts,l0,l_inf,l1,l2,dp_keys,gt_keys\n"
 
     def write(df: DataFrame, batch_id: int) -> None:
-        dp = {r[key_col]: float(r[count_col]) for r in df.collect()}
+        dp = {r["key"]: float(r["count"]) for r in df.collect()}
         keys = set(dp) | set(ground_truth)
         errs = [dp.get(k, 0.0) - ground_truth.get(k, 0.0) for k in keys]
         l0 = sum(1 for v in dp.values() if v > 0)

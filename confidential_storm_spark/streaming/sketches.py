@@ -32,19 +32,17 @@ def hll_distinct_stream(
     value_col: str,
     key_cols: list[str],
     window: str = "1 minute",
-    ts_col: str = "ts",
     watermark_delay: str = "1 minute",
-    out_col: str = "approx_distinct",
 ) -> DataFrame:
-    """Append-mode per-window HLL distinct counts:
-    ``(window_start, window_end, *key_cols, out_col)`` — one row per
-    closed window, estimate identical to the batch
+    """Append-mode per-window HLL distinct counts over event time
+    ``ts``: ``(window_start, window_end, *key_cols, approx_distinct)``
+    — one row per closed window, estimate identical to the batch
     :func:`operators.sketches.hll_distinct` over the same rows."""
     v = F.col(value_col).cast("string")
     regs = (
-        events.withWatermark(ts_col, watermark_delay)
+        events.withWatermark("ts", watermark_delay)
         .groupBy(
-            F.window(F.col(ts_col), window),
+            F.window(F.col("ts"), window),
             *[F.col(c) for c in key_cols],
             _hll_bucket(v).alias("_b"),
         )
@@ -68,7 +66,7 @@ def hll_distinct_stream(
         F.col("window.start").alias("window_start"),
         F.col("window.end").alias("window_end"),
         *key_cols,
-        F.round(est, 4).alias(out_col),
+        F.round(est, 4).alias("approx_distinct"),
     )
 
 
@@ -76,18 +74,17 @@ def histogram_quantiles_stream(
     events: DataFrame,
     value_col: str,
     qs: tuple[float, ...] = (0.25, 0.5, 0.75, 0.9, 0.99),
-    lo: int = 0,
     width: int = 10,
     n_buckets: int = 64,
     window: str = "1 minute",
-    ts_col: str = "ts",
     watermark_delay: str = "1 minute",
     key_cols: list[str] | None = None,
 ) -> DataFrame:
-    """Append-mode per-window quantile estimates with BOUNDED state —
-    the streaming twin of :func:`operators.sketches.histogram_quantiles`
+    """Append-mode per-window quantile estimates over event time ``ts``
+    with BOUNDED state — the streaming twin of
+    :func:`operators.sketches.histogram_quantiles`
     (exact percentiles keep the window's whole value set in state; the
-    equi-width sketch keeps <= ``n_buckets`` integer counts).
+    equi-width sketch from 0 keeps <= ``n_buckets`` integer counts).
 
     Same chained-aggregation shape as :func:`hll_distinct_stream`:
     ``groupBy(window, bucket).count()`` then
@@ -105,14 +102,14 @@ def histogram_quantiles_stream(
     Output: ``(window_start, window_end, *key_cols, q, est)``."""
     nb = n_buckets
     b = F.least(
-        F.greatest(F.floor((F.col(value_col) - lo) / width).cast("long"), F.lit(0)),
+        F.greatest(F.floor(F.col(value_col) / width).cast("long"), F.lit(0)),
         F.lit(nb - 1),
     )
     keys = list(key_cols or [])
     per_bucket = (
-        events.withWatermark(ts_col, watermark_delay)
+        events.withWatermark("ts", watermark_delay)
         .groupBy(
-            F.window(F.col(ts_col), window),
+            F.window(F.col("ts"), window),
             *[F.col(k) for k in keys],
             b.alias("_b"),
         )
@@ -147,8 +144,7 @@ def histogram_quantiles_stream(
 
         f = F.aggregate(F.col("_h"), acc0, step)
         est = (
-            F.lit(float(lo))
-            + f["b"] * F.lit(float(width))
+            f["b"] * F.lit(float(width))
             + F.lit(float(width)) * (target - (f["cb"] - f["c"])) / f["c"]
         )
         return F.round(est, 6)
@@ -177,12 +173,12 @@ def vocab_kl_stream(
     ref_probs: list[float],
     alpha: float = 0.5,
     window: str = "1 minute",
-    ts_col: str = "ts",
     watermark_delay: str = "1 minute",
 ) -> DataFrame:
-    """Per-window vocabulary-drift monitor with BOUNDED state: KL of
-    each closed window's hashed-unigram distribution against a fixed
-    reference — the streaming answer to "is today's crawl shifting?"
+    """Per-window (event time ``ts``) vocabulary-drift monitor with
+    BOUNDED state: KL of each closed window's hashed-unigram
+    distribution against a fixed reference — the streaming answer to
+    "is today's crawl shifting?"
     (batch sibling: ``operators/drift.py::vocab_kl_topk``, which keeps
     the exact union vocabulary and therefore can't run windowed).
 
@@ -212,9 +208,9 @@ def vocab_kl_stream(
         F.conv(F.substring(F.md5(F.col("_w")), 1, 8), 16, 10).cast("long") % B
     ).alias("_b")
     per_bin = (
-        events.withWatermark(ts_col, watermark_delay)
-        .select(F.col(ts_col), w)
-        .select(F.window(F.col(ts_col), window).alias("window"), b)
+        events.withWatermark("ts", watermark_delay)
+        .select(F.col("ts"), w)
+        .select(F.window(F.col("ts"), window).alias("window"), b)
         .groupBy("window", "_b")
         .agg(F.count(F.lit(1)).alias("_c"))
     )
@@ -275,21 +271,22 @@ def hashed_ref_probs(texts: list[str], n_bins: int = 1024, alpha: float = 0.5) -
 
 
 def hashed_ref_probs_spark(
-    df: DataFrame, text_col: str = "text", n_bins: int = 1024, alpha: float = 0.5
+    df: DataFrame, n_bins: int = 1024, alpha: float = 0.5
 ) -> list[float]:
     """Spark-side twin of :func:`hashed_ref_probs`: the reference
-    corpus stays a DataFrame, the hashed-unigram bin counts are
-    aggregated in one distributed pass (explode -> md5 bucket ->
-    groupBy), and only ``n_bins`` (bin, count) rows come back to the
-    driver — never the text itself.  Bucket map and tokenization are
-    the exact expressions :func:`vocab_kl_stream` applies to the
-    stream (``functions.text.words`` + ``md5(w)[:8] % n_bins``), so
+    corpus (its ``text`` column) stays a DataFrame, the
+    hashed-unigram bin counts are aggregated in one distributed pass
+    (explode -> md5 bucket -> groupBy), and only ``n_bins``
+    (bin, count) rows come back to the driver — never the text
+    itself.  Bucket map and tokenization are the exact expressions
+    :func:`vocab_kl_stream` applies to the stream
+    (``functions.text.words`` + ``md5(w)[:8] % n_bins``), so
     the resulting distribution is bit-identical to the pure-Python
     builder on the same rows."""
     from ..functions.text import words
 
     rows = (
-        df.select(F.explode(words(F.col(text_col))).alias("_w"))
+        df.select(F.explode(words(F.col("text"))).alias("_w"))
         .select(
             (
                 F.conv(F.substring(F.md5("_w"), 1, 8), 16, 10).cast("long")

@@ -35,9 +35,10 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql.types import BooleanType, StructField, StructType
 
 from ..dp.mechanism import DPParams, StreamingDPMechanism
-from ..functions.replay import DEFAULT_WINDOW_SIZE, replay_accept
+from ..functions.replay import WINDOW_SIZE, replay_accept
 
 __all__ = [
     "dp_histogram_stream",
@@ -52,13 +53,11 @@ __all__ = [
 def dp_histogram_stream(
     events: DataFrame,
     params: DPParams,
-    key_col: str = "key",
-    user_col: str = "user_id",
-    value_col: str = "value",
     num_buckets: int = 8,
     heartbeats: DataFrame | None = None,
 ) -> DataFrame:
-    """Streaming DP histogram: per micro-batch (== DP epoch) run one
+    """Streaming DP histogram over the canonical ``key``, ``user_id``,
+    ``value`` contributions: per micro-batch (== DP epoch) run one
     ``snapshot()`` per key-bucket and emit the full released histogram
     (carry-forward included) stamped with the bucket's epoch.
 
@@ -83,11 +82,11 @@ def dp_histogram_stream(
         # operator per query — so the windowing happens here in pandas
         # C-speed, not a Python row loop)
         for pdf in pdfs:
-            pdf = pdf[pdf[key_col].notna()]  # heartbeats tick, add nothing
+            pdf = pdf[pdf["key"].notna()]  # heartbeats tick, add nothing
             if pdf.empty:
                 continue
-            totals = pdf.groupby(key_col, sort=False)[value_col].sum()
-            users = pdf.groupby(key_col, sort=False)[user_col].agg(set)
+            totals = pdf.groupby("key", sort=False)["value"].sum()
+            users = pdf.groupby("key", sort=False)["user_id"].agg(set)
             for k, total in totals.items():
                 mech.add_window(k, float(total), users[k])
         hist = mech.snapshot()
@@ -102,7 +101,7 @@ def dp_histogram_stream(
         )
 
     with_bucket = events.withColumn(
-        "bucket", (F.crc32(F.col(key_col).cast("string")) % num_buckets).cast("int")
+        "bucket", (F.crc32(F.col("key").cast("string")) % num_buckets).cast("int")
     )
     if heartbeats is not None:
         with_bucket = with_bucket.unionByName(heartbeats.select(*with_bucket.columns))
@@ -118,15 +117,14 @@ def dp_histogram_stream(
 def bound_contributions_stream(
     events: DataFrame,
     max_contributions: int,
-    user_col: str = "user_id",
     order_cols: tuple[str, ...] = (),
-    num_buckets: int = 32,
 ) -> DataFrame:
     """Streaming per-user contribution bounding (A2): pass through each
-    user's first C rows across all micro-batches; NULL users always
-    pass (event-level privacy).  State = per-user admitted counts,
-    sharded by user hash bucket.  ``order_cols`` fixes the within-batch
-    processing order (arrival order is nondeterministic in a shuffle)."""
+    ``user_id``'s first C rows across all micro-batches; NULL users
+    always pass (event-level privacy).  State = per-user admitted
+    counts, sharded by user hash into 32 buckets.  ``order_cols`` fixes
+    the within-batch processing order (arrival order is
+    nondeterministic in a shuffle)."""
     cols = events.columns
 
     def process(
@@ -141,12 +139,12 @@ def bound_contributions_stream(
             # vectorized bounding: a row is admitted iff (contributions
             # admitted in prior batches) + (this user's 0-based rank
             # within this batch, in order) < C; NULL users always pass
-            users = pdf[user_col]
+            users = pdf["user_id"]
             prior = users.map(lambda u: counts.get(u, 0), na_action="ignore")
-            rank = pdf.groupby(user_col, sort=False, dropna=True).cumcount()
+            rank = pdf.groupby("user_id", sort=False, dropna=True).cumcount()
             keep = users.isna() | ((prior + rank) < max_contributions)
             keep = keep.to_numpy(dtype=bool)
-            admitted = pdf.loc[keep & users.notna().to_numpy(), user_col].value_counts()
+            admitted = pdf.loc[keep & users.notna().to_numpy(), "user_id"].value_counts()
             for u, n in admitted.items():
                 counts[u] = counts.get(u, 0) + int(n)
             out = pdf.loc[keep, cols]
@@ -155,12 +153,11 @@ def bound_contributions_stream(
         state.update((pickle.dumps(counts),))
 
     with_bucket = events.withColumn(
-        "_ub", (F.xxhash64(F.col(user_col).cast("string")) % num_buckets).cast("int")
+        "_ub", (F.xxhash64(F.col("user_id").cast("string")) % 32).cast("int")
     )
-    schema = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in events.schema.fields)
     return with_bucket.groupBy("_ub").applyInPandasWithState(
         process,
-        outputStructType=schema,
+        outputStructType=events.schema,
         stateStructType="blob binary",
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
@@ -170,16 +167,14 @@ def bound_contributions_stream(
 def replay_filter_stream(
     events: DataFrame,
     producer_col: str = "producer_id",
-    seq_col: str = "seq",
-    window_size: int = DEFAULT_WINDOW_SIZE,
     order_col: str | None = None,
 ) -> DataFrame:
-    """Streaming anti-replay (V2): per-producer sliding window with the
-    reference's exact accept semantics (order-sensitive within and
-    across micro-batches; ``order_col`` fixes within-batch order).
-    State = (max_seen, mask bytes)."""
+    """Streaming anti-replay (V2): per-producer sliding window over
+    ``seq`` with the reference's exact accept semantics (order-sensitive
+    within and across micro-batches; ``order_col`` fixes within-batch
+    order).  State = (max_seen, mask bytes)."""
     cols = events.columns
-    n_bytes = (window_size + 7) // 8
+    n_bytes = (WINDOW_SIZE + 7) // 8
 
     def process(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
@@ -195,18 +190,17 @@ def replay_filter_stream(
             if order_col is not None:
                 pdf = pdf.sort_values(order_col, ignore_index=True)
             keep = np.zeros(len(pdf), dtype=bool)
-            for i, seq in enumerate(pdf[seq_col].tolist()):
-                ok, max_seen, mask = replay_accept(max_seen, mask, int(seq), window_size)
+            for i, seq in enumerate(pdf["seq"].tolist()):
+                ok, max_seen, mask = replay_accept(max_seen, mask, int(seq))
                 keep[i] = ok
             out = pdf.loc[keep, cols]
             if len(out):
                 yield out
         state.update((int(max_seen), mask.to_bytes(n_bytes, "big")))
 
-    schema = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in events.schema.fields)
     return events.groupBy(producer_col).applyInPandasWithState(
         process,
-        outputStructType=schema,
+        outputStructType=events.schema,
         stateStructType=f"max_seen long, mask binary",
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
@@ -215,11 +209,10 @@ def replay_filter_stream(
 
 def dedup_stream(
     docs: DataFrame,
-    text_col: str = "text",
     watermark: tuple[str, str] | None = None,
 ) -> DataFrame:
     """Streaming exact content dedup: the FIRST occurrence of each
-    text digest is emitted, later occurrences (same batch or any later
+    ``text`` digest is emitted, later occurrences (same batch or any later
     micro-batch) are dropped.
 
     Spark-first: this is exactly streaming ``dropDuplicates`` keyed on
@@ -233,7 +226,7 @@ def dedup_stream(
     their exact event time; state for a digest is evicted once the
     watermark passes it).
     """
-    digest = F.md5(F.col(text_col))
+    digest = F.md5(F.col("text"))
     out = docs.withColumn("_digest", digest)
     if watermark is not None:
         ts_col, delay = watermark
@@ -247,14 +240,13 @@ def dedup_stream(
 
 def bloom_dedup_stream(
     docs: DataFrame,
-    text_col: str = "text",
     n_buckets: int = 64,
     k: int = 4,
     m_per_bucket: int = 1 << 16,
     order_col: str | None = None,
 ) -> DataFrame:
-    """Streaming maybe-dup flagging with BOUNDED state — the 100 TB
-    complement of :func:`dedup_stream`, whose digest store grows with
+    """Streaming maybe-dup flagging of ``text`` with BOUNDED state —
+    the 100 TB complement of :func:`dedup_stream`, whose digest store grows with
     every distinct document forever.  Each of ``n_buckets`` state
     groups holds a FIXED ``m_per_bucket``-bit Bloom segment (a blocked
     Bloom filter): total state is exactly ``n_buckets * m/8`` bytes no
@@ -278,7 +270,7 @@ def bloom_dedup_stream(
     from ..operators.bloom import _position, bloom_positions
 
     cols = docs.columns
-    dg = F.md5(F.col(text_col))
+    dg = F.md5(F.col("text"))
     with_probe = docs.withColumn(
         "_bucket", _position(dg, "bucket", n_buckets)
     ).withColumn("_pos", bloom_positions(dg, k, m_per_bucket))
@@ -307,25 +299,22 @@ def bloom_dedup_stream(
             yield out
         state.update((bytes(bits),))
 
-    schema = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in docs.schema.fields)
     return with_probe.groupBy("_bucket").applyInPandasWithState(
         process,
-        outputStructType=f"{schema}, maybe_dup boolean",
+        outputStructType=StructType(
+            docs.schema.fields + [StructField("maybe_dup", BooleanType())]
+        ),
         stateStructType="bits binary",
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
-def reservoir_kmin_stream(
-    docs: DataFrame,
-    key_col: str = "source",
-    id_col: str = "doc_id",
-    k: int = 5,
-) -> DataFrame:
-    """Deterministic k-min reservoir maintained PER KEY across ingest
-    batches — the incremental form of the batch ``sample_reservoir``
-    query: state is the k smallest (md5(id), id) pairs seen so far, a
-    k-min sketch, i.e. a commutative-monoid fold over batch union —
+def reservoir_kmin_stream(docs: DataFrame, k: int = 5) -> DataFrame:
+    """Deterministic k-min reservoir of ``doc_id`` maintained PER
+    ``source`` across ingest batches — the incremental form of the
+    batch ``sample_reservoir`` query: state is the k smallest
+    (md5(id), id) pairs seen so far, a k-min sketch, i.e. a
+    commutative-monoid fold over batch union —
     so the standing sample after any number of ingest batches equals
     the batch query over everything ingested, whatever the chopping
     (that identity is what the registry certifies, by sharing the
@@ -338,9 +327,9 @@ def reservoir_kmin_stream(
     reservoir as (key, id, rank); the final state per (key, rank) is
     the sample."""
     with_h = docs.select(
-        F.col(key_col).alias("_k"),
-        F.col(id_col).alias("_id"),
-        F.md5(F.col(id_col).cast("string")).alias("_h"),
+        F.col("source").alias("_k"),
+        F.col("doc_id").alias("_id"),
+        F.md5(F.col("doc_id").cast("string")).alias("_h"),
     )
 
     def process(

@@ -22,23 +22,16 @@ from pyspark.sql import functions as F
 from ..functions.text import words
 
 
-def windowed_wordcounts_stream(
-    docs: DataFrame,
-    window: str = "6 hours",
-    slide: str | None = None,
-    watermark: str = "1 hour",
-    ts_col: str = "ts",
-    text_col: str = "text",
-) -> DataFrame:
-    """(window_start, window_end, word, n) counts per event-time
-    window.  State per window is one row per distinct word; the
-    watermark bounds how many windows stay open."""
-    ws = docs.withWatermark(ts_col, watermark).select(
-        F.col(ts_col), F.explode(words(F.col(text_col))).alias("word")
+def windowed_wordcounts_stream(docs: DataFrame, window: str = "6 hours") -> DataFrame:
+    """(window_start, window_end, word, n) counts of the words of
+    ``text`` per tumbling event-time window of ``ts``.  State per
+    window is one row per distinct word; a 1-hour watermark bounds how
+    many windows stay open."""
+    ws = docs.withWatermark("ts", "1 hour").select(
+        F.col("ts"), F.explode(words(F.col("text"))).alias("word")
     )
-    win = F.window(ts_col, window, slide) if slide else F.window(ts_col, window)
     return (
-        ws.groupBy(win.alias("_w"), "word")
+        ws.groupBy(F.window("ts", window).alias("_w"), "word")
         .agg(F.count("*").alias("n"))
         .select(
             F.col("_w.start").alias("window_start"),

@@ -64,7 +64,7 @@ def test_replay_window_vs_model(seqs):
     accepted/invalidated before; a jump clears history (tracked via the
     in-window set only)."""
     W = 128
-    w = ReplayWindow(W)
+    w = ReplayWindow()
     seen: set[int] = set()
     max_seen = -1
     for s in seqs:

@@ -234,14 +234,14 @@ def test_replay_window_unit_cases():
     """ReplayWindowTest.java:16-98 cases on the pure function."""
     from confidential_storm_spark.functions.replay import ReplayWindow
 
-    w = ReplayWindow(128)
+    w = ReplayWindow()
     assert w.accept(0) is True  # first
     assert w.accept(0) is False  # duplicate
     assert w.accept(-1) is False  # negative
     assert w.accept(5) is True
     assert w.accept(3) is True  # out-of-order within window
     assert w.accept(3) is False  # duplicate within window
-    w2 = ReplayWindow(128)
+    w2 = ReplayWindow()
     assert w2.accept(1000) is True
     assert w2.accept(1000 - 128) is False  # at lower boundary: too old
     assert w2.accept(1000 - 127) is True  # just inside window
@@ -668,7 +668,6 @@ def test_streaming_quantiles_match_batch_sketch(stream_reader, spark):
         stream_reader(batches, SCHEMA_Q),
         "value",
         qs=QS,
-        lo=0,
         width=10,
         n_buckets=64,
         window="1 minute",
@@ -817,7 +816,7 @@ def test_hashed_ref_probs_spark_matches_python(spark):
     df = spark.createDataFrame([(t,) for t in texts], "text string")
     for n_bins, alpha in ((64, 0.5), (17, 1.0)):
         py = hashed_ref_probs(texts, n_bins=n_bins, alpha=alpha)
-        sp = hashed_ref_probs_spark(df, "text", n_bins=n_bins, alpha=alpha)
+        sp = hashed_ref_probs_spark(df, n_bins=n_bins, alpha=alpha)
         assert sp == py
 
 
@@ -834,7 +833,7 @@ def test_reservoir_kmin_stream_is_batch_equivalent(stream_reader, tmp_path):
     batches = [rows[:10], rows[10:45], rows[45:]]
     out: dict = {}
     run_available_now(
-        reservoir_kmin_stream(stream_reader(batches, SCHEMA), "source", "doc_id", k=4)
+        reservoir_kmin_stream(stream_reader(batches, SCHEMA), k=4)
         .writeStream.outputMode("update")
         .foreachBatch(
             lambda df, bid: out.update(

@@ -31,7 +31,7 @@ def test_clean_text_matches_duckdb_twin_on_dirty_inputs(spark):
     con = duckdb.connect()
     con.execute("CREATE TABLE t (i BIGINT, text VARCHAR)")
     con.executemany("INSERT INTO t VALUES (?, ?)", list(enumerate(DIRTY)))
-    want = dict(con.execute(f"SELECT i, {clean_text_sql('text')} FROM t").fetchall())
+    want = dict(con.execute(f"SELECT i, {clean_text_sql()} FROM t").fetchall())
     assert got == want
 
 

@@ -48,7 +48,7 @@ def test_nfc_lower_matches_duckdb(spark, tmp_path):
         ).collect()
     }
     con = duckdb.connect()
-    k = nfc_lower_sql(clean_text_sql("text"))
+    k = nfc_lower_sql(clean_text_sql())
     oracle = dict(
         con.sql(
             f"SELECT doc_id, {k} AS k FROM '{pq}/*.parquet' ORDER BY doc_id"

@@ -45,7 +45,7 @@ def test_char_entropy_matches_duckdb_expression(spark):
     con.execute("CREATE TABLE t (doc_id BIGINT, text VARCHAR)")
     con.executemany("INSERT INTO t VALUES (?, ?)", rows)
     want = dict(
-        con.sql(f"SELECT doc_id, ROUND({char_entropy_sql('text')}, 6) FROM t").fetchall()
+        con.sql(f"SELECT doc_id, ROUND({char_entropy_sql()}, 6) FROM t").fetchall()
     )
     assert got == want
 

@@ -336,3 +336,16 @@ def test_profile_table_matches_pandas_reference(spark):
         if len(f_clean):
             assert got["f"]["min_num"] == round(float(f_clean.min()), 6)
             assert got["f"]["max_num"] == round(float(f_clean.max()), 6)
+
+
+def test_load_table_sees_files_added_to_a_directory_table(spark, tmp_path):
+    """A file added inside a partition directory leaves the table
+    directory's size and mtime unchanged; load_table must still list it."""
+    from confidential_storm_spark.sources.tables import load_table
+
+    path = str(tmp_path / "t.parquet")
+    spark.range(10).withColumn("p", F.col("id") % 2).write.partitionBy("p").parquet(path)
+    assert load_table(spark, str(tmp_path), "t").count() == 10
+    spark.range(10, 15).write.mode("append").parquet(f"{path}/p=0")
+    assert spark.read.parquet(path).count() == 15
+    assert load_table(spark, str(tmp_path), "t").count() == 15

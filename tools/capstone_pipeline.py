@@ -195,7 +195,7 @@ def main() -> int:
             "length_quantiles": (
                 "append",
                 lambda: histogram_quantiles_stream(
-                    mon_feed(), "n_chars", qs=(0.5, 0.9, 0.99), lo=0,
+                    mon_feed(), "n_chars", qs=(0.5, 0.9, 0.99),
                     width=20, n_buckets=128, window="1 minute",
                     watermark_delay="30 seconds",
                 ),

@@ -149,7 +149,7 @@ def bloom_dedup(spark, rps, keys, workdir):
         F.col("value").alias("doc_id"),
         F.concat(F.lit("document body "), (F.col("value") % keys).cast("string")).alias("text"),
     )
-    out = bloom_dedup_stream(docs, n_buckets=64, k=4, m_per_bucket=1 << 16)
+    out = bloom_dedup_stream(docs)
     return [start(_noop(out, "append"), f"{workdir}/ckpt")]
 
 
@@ -172,7 +172,7 @@ def reservoir(spark, rps, keys, workdir):
         F.pmod(F.xxhash64("value"), F.lit(keys)).cast("string").alias("source"),
         F.col("value").alias("doc_id"),
     )
-    out = reservoir_kmin_stream(docs, key_col="source", id_col="doc_id", k=5)
+    out = reservoir_kmin_stream(docs)
     return [start(_noop(out), f"{workdir}/ckpt")]
 
 

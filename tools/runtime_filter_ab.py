@@ -1,9 +1,11 @@
 """Measured A/B: Spark's runtime bloom-filter join reduction
 (`spark.sql.optimizer.runtime.bloomFilter.*`) on the selective
 dim-slice -> fact join — the third member of the shuffle-reduction
-toolbox next to the bucketing A/B (tools/bucketed_join_ab.py, removes
-the shuffle entirely for a one-time layout cost) and the skew A/B
-(tools/skew_join_ab.py).
+toolbox next to the bucketing A/B (benchmark/bucketed_join_ab.csv,
+written by the since deleted tools/bucketed_join_ab.py: bucketing
+removes the shuffle entirely for a one-time layout cost) and the skew
+A/B (benchmark/skew_join_ab.csv, written by the since deleted
+tools/skew_join_ab.py).
 
 Shape: lineitem joined to a FILTERED orders slice on l_orderkey.  The
 tables are not partitioned by the join key, so dynamic partition

@@ -89,7 +89,7 @@ def main() -> int:
             stream().select("source"), "source", capacity=32, num_shards=4
         ),
         "length_quantiles": lambda: histogram_quantiles_stream(
-            stream(), "n_chars", qs=(0.5, 0.9, 0.99), lo=0, width=20,
+            stream(), "n_chars", qs=(0.5, 0.9, 0.99), width=20,
             n_buckets=128, window=WINDOW, watermark_delay=DELAY,
         ),
         "vocab_kl_drift": lambda: vocab_kl_stream(

@@ -58,10 +58,7 @@ def run_once(spark, t: int, users: int, keys: int, seed: int, buckets: int,
     )
 
     t0 = time.perf_counter()
-    dp = dp_histogram_batch(
-        df, params, key_col="key", user_col="user_id", value_col="value",
-        epoch_col="epoch", num_buckets=buckets,
-    )
+    dp = dp_histogram_batch(df, params, num_buckets=buckets)
     gt = df.groupBy("key").agg(F.sum("value").alias("gt_total"))
     joined = dp.join(gt, on="key", how="full_outer")
     d = F.coalesce(F.col("count").cast("double"), F.lit(0.0))
