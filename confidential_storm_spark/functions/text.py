@@ -151,19 +151,18 @@ def token_count(text: Column) -> Column:
     return F.size(words(text))
 
 
-def quality_features(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """Quality-scoring features for training-data filtering:
-    token count, mean token length, stopword ratio, alpha ratio."""
-    ws = words(F.col(text_col))
+def quality_features(df: DataFrame) -> DataFrame:
+    """Quality-scoring features of ``text`` per ``doc_id`` for
+    training-data filtering: token count, mean token length, stopword
+    ratio, alpha ratio."""
+    ws = words(F.col("text"))
     n_tokens = F.size(ws)
     stop_arr = F.array(*[F.lit(s) for s in STOPWORDS])
     n_stop = F.size(F.filter(ws, lambda w: F.array_contains(stop_arr, w)))
-    n_chars = F.length(F.col(text_col))
-    n_alpha = F.length(F.regexp_replace(F.col(text_col), "[^a-zA-Z]", ""))
+    n_chars = F.length(F.col("text"))
+    n_alpha = F.length(F.regexp_replace(F.col("text"), "[^a-zA-Z]", ""))
     return df.select(
-        id_col,
+        "doc_id",
         n_tokens.alias("n_tokens"),
         F.round(
             F.aggregate(ws, F.lit(0), lambda acc, w: acc + F.length(w)).cast("double")

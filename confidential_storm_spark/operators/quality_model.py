@@ -156,16 +156,16 @@ def hashed_tf_features(
     return tf.unionByName(bias)
 
 
-def rule_labels(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """(doc_id, y): bootstrap labels from the certified quality rules —
+def rule_labels(df: DataFrame) -> DataFrame:
+    """(doc_id, y): bootstrap labels of ``text`` from the certified quality rules —
     y = 1 when the doc looks prose-like (stopword_ratio and token
     count above floor), the CCNet move of labeling by a reference
     heuristic and training a generalizing model."""
     from ..functions.text import quality_features
 
-    q = quality_features(df, text_col=text_col, id_col=id_col)
+    q = quality_features(df)
     return q.select(
-        F.col(id_col).alias("doc_id"),
+        "doc_id",
         F.when(
             (F.col("stopword_ratio") >= RULE_STOPWORD_MIN)
             & (F.col("n_tokens") >= RULE_TOKENS_MIN),

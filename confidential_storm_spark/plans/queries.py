@@ -6646,7 +6646,6 @@ def stream_kl_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             s,
             "text",
             ref,
-            alpha=_KL_ALPHA,
             window="2 days",
             watermark_delay="40 days",
         ),
@@ -7003,9 +7002,7 @@ def stream_join_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         buys = s.where(F.col("event_type") == "purchase").select(
             "user_id", "event_id", "ts"
         )
-        j = interval_join_streams(
-            views, buys, "user_id", upper="1 hour", watermark="90 days", how="inner"
-        )
+        j = interval_join_streams(views, buys, "user_id", watermark="90 days")
         return j.select(
             "user_id",
             "view_id",

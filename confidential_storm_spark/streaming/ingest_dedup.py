@@ -52,6 +52,16 @@ __all__ = [
     "curated_ingest_stream",
 ]
 
+# MinHash/LSH dials of the index: K = 16 minhashes over 3-word
+# shingles, cut into 4 bands of 4 rows; a candidate is a near-dup when
+# its signature estimate reaches 0.5.  The index on disk is only
+# meaningful under the dials that wrote it, so they are fixed here.
+NUM_HASHES = 16
+BANDS = 4
+SHINGLE_N = 3
+THRESHOLD = 0.5
+SEED = 42
+
 
 def signature_estimate(sig_a, sig_b) -> F.Column:
     """Estimated Jaccard: fraction of agreeing minhash positions.
@@ -69,7 +79,6 @@ def _matched_ids(
     probe_sigs: DataFrame,
     index_bands: DataFrame,
     index_sigs: DataFrame,
-    threshold: float,
 ) -> DataFrame:
     """Batch doc ids whose signature-estimate vs ANY index doc reaches
     the threshold.  Bands prefilter candidates; the sig join runs on
@@ -82,7 +91,7 @@ def _matched_ids(
     return (
         cand.join(probe_sigs.select(F.col("_id").alias("new_id"), F.col("_sig").alias("sig_a")), "new_id")
         .join(index_sigs.select(F.col("doc_id").alias("old_id"), F.col("sig").alias("sig_b")), "old_id")
-        .filter(signature_estimate(F.col("sig_a"), F.col("sig_b")) >= threshold)
+        .filter(signature_estimate(F.col("sig_a"), F.col("sig_b")) >= THRESHOLD)
         .select("new_id")
         .distinct()
     )
@@ -92,17 +101,11 @@ def process_ingest_batch(
     batch: DataFrame,
     index_path: str,
     survivors_path: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = 16,
-    bands: int = 4,
-    shingle_n: int = 3,
-    threshold: float = 0.5,
-    seed: int = 42,
     max_internal_pairs: int = 1_000_000,
 ) -> None:
     """One micro-batch of the ingest-dedup pipeline (the foreachBatch
-    body, callable directly for batch replays/tests): drop batch docs
+    body, callable directly for batch replays/tests) over ``doc_id`` and
+    ``text``: drop batch docs
     matching the index, then batch-internal near-dups (lower id
     survives), append survivors to ``survivors_path`` and their
     bands/sigs to the index.
@@ -116,8 +119,8 @@ def process_ingest_batch(
     from ..operators.dedup import _band_tuples, _shingled_sigs
 
     spark = batch.sparkSession
-    sigs = _shingled_sigs(batch, text_col, id_col, num_hashes, shingle_n, seed)
-    probe = _band_tuples(sigs, bands, num_hashes // bands)
+    sigs = _shingled_sigs(batch, "text", "doc_id", NUM_HASHES, SHINGLE_N, SEED)
+    probe = _band_tuples(sigs, BANDS, NUM_HASHES // BANDS)
 
     have_index = os.path.exists(f"{index_path}/bands/_SUCCESS") or os.path.isdir(
         f"{index_path}/bands"
@@ -127,7 +130,7 @@ def process_ingest_batch(
             "doc_id", "band", "band_hash"
         )
         index_sigs = spark.read.parquet(f"{index_path}/sigs")
-        vs_index = _matched_ids(probe, sigs, index_bands, index_sigs, threshold)
+        vs_index = _matched_ids(probe, sigs, index_bands, index_sigs)
         keep = sigs.join(
             vs_index.withColumnRenamed("new_id", "_id"), "_id", "left_anti"
         ).localCheckpoint(eager=False)
@@ -140,7 +143,7 @@ def process_ingest_batch(
     # rule is sequential by id, so it runs as a driver-side loop over
     # the batch's own near-dup pair list — bounded by the micro-batch,
     # never the corpus.
-    keep_bands = _band_tuples(keep, bands, num_hashes // bands)
+    keep_bands = _band_tuples(keep, BANDS, NUM_HASHES // BANDS)
     pairs = (
         keep_bands.alias("l")
         .join(
@@ -153,7 +156,7 @@ def process_ingest_batch(
         .distinct()
         .join(keep.select(F.col("_id").alias("id_a"), F.col("_sig").alias("sig_a")), "id_a")
         .join(keep.select(F.col("_id").alias("id_b"), F.col("_sig").alias("sig_b")), "id_b")
-        .filter(signature_estimate(F.col("sig_a"), F.col("sig_b")) >= threshold)
+        .filter(signature_estimate(F.col("sig_a"), F.col("sig_b")) >= THRESHOLD)
         .select("id_a", "id_b")
     )
     # bounded by the micro-batch's own pair count, with an explicit
@@ -178,14 +181,14 @@ def process_ingest_batch(
         )
         keep = keep.join(F.broadcast(drop_df), "_id", "left_anti")
 
-    survivors = keep.select(F.col("_id").alias(id_col))
+    survivors = keep.select(F.col("_id").alias("doc_id"))
     (
-        batch.join(survivors, id_col, "left_semi")
+        batch.join(survivors, "doc_id", "left_semi")
         .write.mode("append")
         .parquet(survivors_path)
     )
     keep_out = keep.localCheckpoint(eager=False)
-    _band_tuples(keep_out, bands, num_hashes // bands).select(
+    _band_tuples(keep_out, BANDS, NUM_HASHES // BANDS).select(
         F.col("_id").alias("doc_id"), "band", "band_hash"
     ).write.mode("append").partitionBy("band").parquet(f"{index_path}/bands")
     keep_out.select(F.col("_id").alias("doc_id"), F.col("_sig").alias("sig")).write.mode(
@@ -198,14 +201,13 @@ def neardup_ingest_stream(
     index_path: str,
     survivors_path: str,
     checkpoint_dir: str,
-    **dials,
 ) -> StreamingQuery:
     """Wire :func:`process_ingest_batch` onto a streaming document
     source.  Drains all available input and returns the terminated
     StreamingQuery."""
 
     def _process(batch: DataFrame, epoch_id: int) -> None:
-        process_ingest_batch(batch, index_path, survivors_path, **dials)
+        process_ingest_batch(batch, index_path, survivors_path)
 
     return run_available_now(docs.writeStream.foreachBatch(_process), checkpoint_dir)
 
@@ -217,9 +219,6 @@ def process_curated_batch(
     survivors_path: str,
     rejects_path: str | None = None,
     min_score: float = 0.0,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    **dials,
 ) -> None:
     """One micro-batch of the FULL curation pipeline: trained-model
     quality gate, then near-dedup against the self-maintaining index.
@@ -248,21 +247,19 @@ def process_curated_batch(
     # and checkpoint the scored frame so the rejects write and the
     # survivors filter reuse ONE evaluation instead of re-deriving _q.
     scored = (
-        _spread(batch, id_col)
-        .withColumn("_q", quality_score_expr(weights, text_col))
+        _spread(batch, "doc_id")
+        .withColumn("_q", quality_score_expr(weights))
         .localCheckpoint(eager=False)
     )
     if rejects_path is not None:
         (
             scored.filter((F.col("_q") < min_score) | F.col("_q").isNull())
-            .select(id_col, F.col("_q").alias("quality_score"))
+            .select("doc_id", F.col("_q").alias("quality_score"))
             .write.mode("append")
             .parquet(rejects_path)
         )
     passed = scored.filter(F.col("_q") >= min_score).drop("_q")
-    process_ingest_batch(
-        passed, index_path, survivors_path, text_col=text_col, id_col=id_col, **dials
-    )
+    process_ingest_batch(passed, index_path, survivors_path)
 
 
 def curated_ingest_stream(
@@ -273,7 +270,6 @@ def curated_ingest_stream(
     checkpoint_dir: str,
     rejects_path: str | None = None,
     min_score: float = 0.0,
-    **dials,
 ) -> StreamingQuery:
     """Quality-gate + near-dedup curation as one streaming pipeline.
     Drains all available input and returns the terminated
@@ -287,7 +283,6 @@ def curated_ingest_stream(
             survivors_path,
             rejects_path=rejects_path,
             min_score=min_score,
-            **dials,
         )
 
     return run_available_now(docs.writeStream.foreachBatch(_process), checkpoint_dir)

@@ -171,7 +171,6 @@ def vocab_kl_stream(
     events: DataFrame,
     text_col: str,
     ref_probs: list[float],
-    alpha: float = 0.5,
     window: str = "1 minute",
     watermark_delay: str = "1 minute",
 ) -> DataFrame:
@@ -186,7 +185,7 @@ def vocab_kl_stream(
     as :func:`hashed_ref_probs`, so reference and stream always share
     the space); per window the state is the <= B bin counts (chained
     windowed aggs, append mode), and the finishing math — add-alpha
-    smoothing over the bins, then KL(P_window || Q_ref) — is stateless
+    smoothing over the bins (alpha = 0.5), then KL(P_window || Q_ref) — is stateless
     column arithmetic.  Absent bins contribute through a closed form
     (all absent bins share p0 = alpha/(N + alpha*B)), so the result is
     the EXACT KL over all B bins, not a present-bin approximation.
@@ -196,6 +195,7 @@ def vocab_kl_stream(
 
     from ..functions.text import words
 
+    alpha = 0.5
     B = len(ref_probs)
     q = [float(x) for x in ref_probs]
     if any(x <= 0 for x in q):

@@ -241,7 +241,6 @@ def dedup_stream(
 def bloom_dedup_stream(
     docs: DataFrame,
     n_buckets: int = 64,
-    k: int = 4,
     m_per_bucket: int = 1 << 16,
     order_col: str | None = None,
 ) -> DataFrame:
@@ -258,7 +257,7 @@ def bloom_dedup_stream(
     (accepting the FP rate as over-dedup) or routes only the flagged
     minority into an exact check.
 
-    Plan shape: digest, bucket, and the k probe positions are all
+    Plan shape: digest, bucket, and the 4 probe positions are all
     computed JVM-side (the md5 expressions of ``operators.bloom``), so
     the stateful Python stage only tests/sets bits in a bytearray —
     no hashing crosses the Arrow boundary.  State groups scale
@@ -273,7 +272,7 @@ def bloom_dedup_stream(
     dg = F.md5(F.col("text"))
     with_probe = docs.withColumn(
         "_bucket", _position(dg, "bucket", n_buckets)
-    ).withColumn("_pos", bloom_positions(dg, k, m_per_bucket))
+    ).withColumn("_pos", bloom_positions(dg, 4, m_per_bucket))
     n_bytes = m_per_bucket // 8
 
     def process(

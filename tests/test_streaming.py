@@ -505,7 +505,6 @@ def test_streaming_bloom_dedup_flags_cross_batch(stream_reader):
     stream = bloom_dedup_stream(
         stream_reader(batches, DOC_SCHEMA),
         n_buckets=N_BUCKETS,
-        k=K,
         m_per_bucket=M,
         order_col="doc_id",
     )
@@ -765,7 +764,6 @@ def test_streaming_vocab_kl_drift(stream_reader, spark):
         stream_reader(batches, SCHEMA_T),
         "text",
         ref,
-        alpha=ALPHA,
         window="1 minute",
         watermark_delay="30 seconds",
     )

@@ -21,7 +21,6 @@ from confidential_storm_spark.streaming.ingest_dedup import (
 )
 
 THRESH = 0.5
-DIALS = dict(num_hashes=16, bands=4, shingle_n=3, threshold=THRESH, seed=42)
 
 
 def _estimate_pairs(spark, docs, ids_a, ids_b):
@@ -62,7 +61,7 @@ def test_ingest_dedup_invariants(spark, sf_dir, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    neardup_ingest_stream(stream, index, out, str(tmp_path / "ckpt"), **DIALS)
+    neardup_ingest_stream(stream, index, out, str(tmp_path / "ckpt"))
 
     survivors = {r["doc_id"] for r in spark.read.parquet(out).collect()}
     all_ids = {
@@ -114,9 +113,7 @@ def test_ingest_batch_replay_matches_stream(spark, sf_dir, tmp_path):
     index = str(tmp_path / "idx2")
     out = str(tmp_path / "out2")
     for g in range(3):
-        process_ingest_batch(
-            docs.filter(F.col("doc_id") % 3 == g), index, out, **DIALS
-        )
+        process_ingest_batch(docs.filter(F.col("doc_id") % 3 == g), index, out)
     survivors = {r["doc_id"] for r in spark.read.parquet(out).collect()}
     # first batch is index-free: its own internal near-dups still drop
     assert survivors
@@ -172,7 +169,6 @@ def test_curated_ingest_gates_quality_then_dedups(spark, tmp_path):
         str(tmp_path / "ckpt"),
         rejects_path=str(tmp_path / "rejects"),
         min_score=thr,
-        **DIALS,
     )
 
     surv = {r.doc_id for r in spark.read.parquet(str(tmp_path / "survivors")).collect()}

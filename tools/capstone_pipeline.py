@@ -42,7 +42,6 @@ PROBE_SAMPLE_RATE = 0.02  # hash-sample fraction for probe training
 QUALITY_REJECT_QUANTILE = 0.2
 PACK_BUDGET = 2048
 MIXTURE_KEEP_FRAC = 0.3  # token budget = 30% of survivor tokens
-DIALS = dict(num_hashes=16, bands=4, shingle_n=3, threshold=0.5, seed=42)
 
 
 def main() -> int:
@@ -242,7 +241,6 @@ def main() -> int:
         f"{work}/ckpt",
         rejects_path=f"{work}/rejects",
         min_score=min_score,
-        **DIALS,
     )
     wall_ingest = time.time() - t0
     monitor_rows: list[dict] = []
@@ -297,7 +295,7 @@ def main() -> int:
     )
     n_day2 = day2.count()
     t0 = time.time()
-    process_ingest_batch(day2, index_path, f"{work}/day2_survivors", **DIALS)
+    process_ingest_batch(day2, index_path, f"{work}/day2_survivors")
     wall = time.time() - t0
     try:
         n_day2_surv = spark.read.parquet(f"{work}/day2_survivors").count()
